@@ -48,21 +48,42 @@ from ..plans.registry import register
 from ..sources.readers import table
 
 
+def local_relation(df: DataFrame, jrows=None) -> DataFrame:
+    """``df``'s rows as a ``LocalRelation`` frame with the identical
+    schema, built inside the JVM (``SparkSession.createDataFrame(
+    java.util.List, StructType)``). ``jrows`` is an already collected
+    ``df._jdf.collectAsList()``; without it ``df`` is collected here.
+    The Python route, ``createDataFrame(df.collect(), df.schema)``, builds
+    a Python RDD, so consuming even a 1-row result started 4 Python tasks;
+    this route starts no Python worker, and collecting the returned frame
+    runs no job. Measured at local[4] on a 1-row result, collect + re-wrap
+    + consumer collect: 1.1-1.3 CPU-s (0.33-0.39 s) by the Python route,
+    0.10-0.17 CPU-s (0.04-0.07 s) by this one.
+    Arrow (``toArrow``) is not an alternative: it rejects a null struct
+    whose fields are declared non-null."""
+    if jrows is None:
+        jrows = df._jdf.collectAsList()
+    spark = df.sparkSession
+    return DataFrame(spark._jsparkSession.createDataFrame(
+        jrows, df._jdf.schema()), spark)
+
+
 def materialize_release(df: DataFrame, caches: list[DataFrame]) -> DataFrame:
     """Collect a BOUNDED result while its supporting caches are hot, then
-    unpersist them and rehydrate the rows as a local-relation DataFrame
-    with the identical schema. Only for results bounded by construction
-    (LIMIT k / 1-row audits) — never node- or edge-sized tables.
-    Release goes through ``registry.unpersist_any`` so checkpoint-backed
-    frames (LogicalRDD pins OUTSIDE the CacheManager) are freed too —
-    plain ``unpersist()`` is a no-op on a localCheckpoint."""
+    unpersist them and return the rows as a JVM-built ``LocalRelation``
+    with the identical schema (``local_relation``). Only for results
+    bounded by construction (LIMIT k / 1-row audits) — never node- or
+    edge-sized tables. Release goes through ``registry.unpersist_any`` so
+    checkpoint-backed frames (LogicalRDD pins OUTSIDE the CacheManager)
+    are freed too — plain ``unpersist()`` is a no-op on a
+    localCheckpoint."""
     from ..plans.registry import unpersist_any
     try:
-        rows = df.collect()
+        rows = df._jdf.collectAsList()
     finally:
         for c in caches:
             unpersist_any(c)
-    return df.sparkSession.createDataFrame(rows, df.schema)
+    return local_relation(df, rows)
 
 
 def copurchase_edges(li: DataFrame) -> DataFrame:

@@ -60,10 +60,11 @@ _CACHE_MAX = 4
 _MATRIX_CACHE: dict[tuple[str, int], object] = {}
 
 
-def _broadcast_matrix(emb: DataFrame, id_col: str, vec_col: str):
+def _broadcast_side(emb: DataFrame, id_col: str, vec_col: str):
     """Collect-once + broadcast-once (ids, matrix) for the kernel side
     table, LRU-cached per (session, plan semantics). Returns the live
-    Broadcast handle."""
+    Broadcast handle and the side's row count (kept driver-side: reading
+    ``Broadcast.value`` on the driver re-loads the pickled matrix)."""
     spark = emb.sparkSession
     proj = emb.select(id_col, vec_col)
     try:
@@ -82,29 +83,48 @@ def _broadcast_matrix(emb: DataFrame, id_col: str, vec_col: str):
         mat = np.zeros((0, 1), dtype=np.float64)
     else:
         mat = np.array(pdf[vec_col].to_list(), dtype=np.float64)
-    bc = spark.sparkContext.broadcast((ids, mat))
+    entry = (spark.sparkContext.broadcast((ids, mat)), len(ids))
     if key is None:
-        return bc
-    _MATRIX_CACHE[key] = bc
+        return entry
+    _MATRIX_CACHE[key] = entry
     while len(_MATRIX_CACHE) > _CACHE_MAX:
-        old = _MATRIX_CACHE.pop(next(iter(_MATRIX_CACHE)))
+        old, _ = _MATRIX_CACHE.pop(next(iter(_MATRIX_CACHE)))
         try:
             old.unpersist()
         except Exception:  # noqa: BLE001 — session already stopped
             pass
-    return bc
+    return entry
 
 
-def _spread(emb: DataFrame) -> DataFrame:
-    """Repartition the kernel's STREAMING side up to the cluster's default
-    parallelism when it arrives underpartitioned (e.g. a 1-2 file parquet
-    scan or a cached ml-transform output): the GEMM + Arrow emit otherwise
-    runs on as many cores as there are input partitions. A no-op (no extra
-    shuffle) whenever the input is already at least default-parallel — the
-    normal state for real at-scale inputs."""
-    spark = emb.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    if emb.rdd.getNumPartitions() < target:
+def _broadcast_matrix(emb: DataFrame, id_col: str, vec_col: str):
+    """The live Broadcast handle of ``_broadcast_side``."""
+    return _broadcast_side(emb, id_col, vec_col)[0]
+
+
+#: pairs per streaming-side task. Measured on a 4-core host (local[4],
+#: one BLAS thread per worker): the kernel's numpy work is ~0.025 CPU-s at
+#: 1,000 x 32 embeddings (10^6 pairs) and ~0.5 CPU-s at 2^24 pairs, while
+#: each extra Python task costs ~0.15-0.2 CPU-s whatever its rows —
+#: topk_candidate_pairs plus its euclidean_arrow re-rank over 1,000 x 32
+#: took 1.4-2.1 CPU-s per call in 1 task and 2.7-2.9 CPU-s spread over 4.
+#: At 2^24 pairs a task's work outweighs its start-up.
+PAIRS_PER_TASK = 1 << 24
+
+
+def _spread(emb: DataFrame, n_b: int) -> DataFrame:
+    """Repartition the kernel's STREAMING side when the kernel's work pays
+    for more tasks: the target is ``min(defaultParallelism,
+    ceil(n_b^2 / PAIRS_PER_TASK))``, sized from the broadcast side's row
+    count ``n_b`` (the streaming side is the same table, so n_b^2 is the
+    pair count), which the driver already holds — no extra job. A small
+    input keeps its partitioning (no shuffle); an underpartitioned large
+    one (e.g. a 1-2 file parquet scan or a cached ml-transform output) is
+    spread so the GEMM + Arrow emit do not run on as many cores as there
+    are input partitions. A no-op whenever the input already has at least
+    the target's partitions."""
+    target = min(emb.sparkSession.sparkContext.defaultParallelism,
+                 (n_b * n_b + PAIRS_PER_TASK - 1) // PAIRS_PER_TASK)
+    if target > 1 and emb.rdd.getNumPartitions() < target:
         return emb.repartition(target)
     return emb
 
@@ -114,7 +134,7 @@ def eps_pairs_broadcast(emb: DataFrame, id_col: str, vec_col: str,
     """Directed exact eps-neighbor pairs (a, b), a != b,
     ||va - vb||^2 <= eps^2. Same output as the cross-join form, at
     dense-BLAS speed."""
-    bc = _broadcast_matrix(emb, id_col, vec_col)
+    bc, n_b = _broadcast_side(emb, id_col, vec_col)
     eps2 = float(eps) * float(eps)
     band = 1e-6 * max(eps2, 1.0)
     guard = eps2 + band
@@ -169,7 +189,7 @@ def eps_pairs_broadcast(emb: DataFrame, id_col: str, vec_col: str,
                     "a": np.concatenate(out_a),
                     "b": np.concatenate(out_b)})
 
-    return _spread(emb.select(id_col, vec_col)).mapInPandas(gen, "a long, b long")
+    return _spread(emb.select(id_col, vec_col), n_b).mapInPandas(gen, "a long, b long")
 
 
 def topk_candidate_pairs(emb: DataFrame, id_col: str, vec_col: str,
@@ -178,7 +198,7 @@ def topk_candidate_pairs(emb: DataFrame, id_col: str, vec_col: str,
     neighbors (self excluded), pruned from n-1 to ~k by numpy distance with
     a slack band covering GEMM error and exact-vs-numpy summation-order
     skew. Callers re-rank with the oracle-exact distance expression."""
-    bc = _broadcast_matrix(emb, id_col, vec_col)
+    bc, n_b = _broadcast_side(emb, id_col, vec_col)
     k = int(k)
 
     def gen(batches):
@@ -221,4 +241,4 @@ def topk_candidate_pairs(emb: DataFrame, id_col: str, vec_col: str,
                 ai, bi = np.nonzero(g <= thresh[:, None])
                 yield pd.DataFrame({"a": a_ids[ai], "b": b_ids[bi]})
 
-    return _spread(emb.select(id_col, vec_col)).mapInPandas(gen, "a long, b long")
+    return _spread(emb.select(id_col, vec_col), n_b).mapInPandas(gen, "a long, b long")

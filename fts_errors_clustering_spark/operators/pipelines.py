@@ -233,7 +233,8 @@ def rest_tail_category_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(ckpt, ignore_errors=True)
     agg = (spark.table(name).groupBy("category")
            .agg(F.count("*").alias("n_records")))
-    out = spark.createDataFrame(agg.collect(), agg.schema)
+    from .graph import local_relation
+    out = local_relation(agg)
     spark.catalog.dropTempView(name)
     return out
 

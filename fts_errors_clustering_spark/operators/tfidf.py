@@ -284,20 +284,68 @@ def lsa_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 GRAM_SVD_MAX_DIM = 2048
 
 
+#: rows per gram chunk: one (chunk x d)^T (chunk x d) BLAS product each.
+#: Part of G's summation order, so changing it changes G's low bits.
+_GRAM_CHUNK = 1024
+
+
+def _gram(arr_df: DataFrame, d: int):
+    """G = X^T X over the ``x`` (array<double>, length d) column: per
+    partition, a sum of ``_GRAM_CHUNK``-row ``X^T X`` products started from
+    zeros, then the per-partition partials folded on the driver in
+    partition order. Runs as ``mapInPandas`` over the ``vector_to_array``
+    frame the projection reads too; the ``rdd.mapPartitions`` +
+    ``treeReduce`` form this replaces had its Python worker re-import
+    ``pyspark.ml`` and pandas on every op (0.9-1.3 s, on flow A's critical
+    path). The summation order is the one that ``treeReduce`` had below
+    its tree threshold (8 partitions), so G is bit-identical to it
+    there."""
+    import numpy as np
+    import pandas as pd
+    from pyspark import TaskContext
+
+    def part_gram(batches):
+        G = np.zeros((d, d))
+        chunk: list = []
+        for pdf in batches:
+            for x in pdf["x"]:
+                chunk.append(x)
+                if len(chunk) == _GRAM_CHUNK:
+                    X = np.asarray(chunk)
+                    G += X.T @ X
+                    chunk = []
+        if chunk:
+            X = np.asarray(chunk)
+            G += X.T @ X
+        yield pd.DataFrame({"pid": [TaskContext.get().partitionId()],
+                            "g": [G.tobytes()]})
+
+    parts = (arr_df.select("x")
+             .mapInPandas(part_gram, "pid int, g binary").collect())
+    G = None
+    for r in sorted(parts, key=lambda r: r.pid):
+        g = np.frombuffer(r.g).reshape(d, d)
+        G = g.copy() if G is None else G + g
+    return G
+
+
 def _gram_svd(features_df: DataFrame, k: int, id_col: str, input_col: str,
               d: int):
     """Exact truncated SVD for BOUNDED feature dims via the gram matrix:
-    G = X^T X accumulated per partition (one BLAS syrk-shaped product per
-    Arrow-sized batch, treeReduce of d x d partials), eigendecomposed on
-    the driver (X^T X = V S^2 V^T), rows projected distributedly as X.V_k.
-    One pass over X, no RDD-of-rows bridge, no per-row Python in the
-    aggregate hot path beyond the batch gather. Explained variance falls
-    out for free: sum(top-k eigenvalues) / trace(G) — trace(G) IS
-    ||X||_F^2, so the separate Frobenius pass disappears too. Same
-    subspace as computeSVD up to component sign (both inherit eigenvector
-    sign indeterminacy; downstream is L2-normalized clustering)."""
+    G = X^T X accumulated per partition over the dense ``x`` projection
+    (``_gram``: one BLAS product per 1,024-row chunk, d x d partials
+    folded on the driver), eigendecomposed on the driver
+    (X^T X = V S^2 V^T), rows projected distributedly as X.V_k. Both the
+    gram pass and the projection read the same ``vector_to_array`` frame
+    through ``mapInPandas``: no RDD-of-rows bridge, no per-row Python in
+    the aggregate beyond the chunk gather. Explained variance falls out
+    for free: sum(top-k eigenvalues) / trace(G) — trace(G) IS ||X||_F^2,
+    so the separate Frobenius pass disappears too. Same subspace as
+    computeSVD up to component sign (both inherit eigenvector sign
+    indeterminacy; downstream is L2-normalized clustering)."""
     import numpy as np
     import pandas as pd
+    from pyspark.ml.functions import vector_to_array
 
     from ..plans.registry import retain_for_consumer
 
@@ -306,23 +354,9 @@ def _gram_svd(features_df: DataFrame, k: int, id_col: str, input_col: str,
     # gram pass and the final projection pass both read it — uncached,
     # each re-paid the full tokenize+cv+idf transform lineage (guide §5.1)
     proj = retain_for_consumer(features_df.select(id_col, input_col))
-    rows = proj.rdd
+    arr_df = proj.select(id_col, vector_to_array(input_col).alias("x"))
 
-    def part_gram(it):
-        G = np.zeros((d, d))
-        batch: list = []
-        for r in it:
-            batch.append(r[1].toArray())
-            if len(batch) == 1024:
-                X = np.asarray(batch)
-                G += X.T @ X
-                batch = []
-        if batch:
-            X = np.asarray(batch)
-            G += X.T @ X
-        yield G
-
-    G = rows.mapPartitions(part_gram).treeReduce(lambda a, b: a + b)
+    G = _gram(arr_df, d)
     evals, evecs = np.linalg.eigh(G)
     order = np.argsort(evals)[::-1][:k]
     lam = np.clip(evals[order], 0.0, None)
@@ -330,8 +364,6 @@ def _gram_svd(features_df: DataFrame, k: int, id_col: str, input_col: str,
     explained = float(lam.sum()) / max(float(np.trace(G)), 1e-300)
 
     bV = sc.broadcast(V)
-    from pyspark.ml.functions import vector_to_array
-    arr_df = proj.select(id_col, vector_to_array(input_col).alias("x"))
 
     def project(batches):
         Vk = bV.value

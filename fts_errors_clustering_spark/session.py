@@ -104,6 +104,14 @@ def get_spark(app_name: str = "fts-errors-clustering-spark",
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
+        # Janino class cache, static (builder-only) so it cannot move to
+        # tune_session. One warm cluster op (flow A + flow B at 1,000 docs)
+        # needs 162 generated classes and one bench.py HEADLINE pass
+        # ~2.4k; at Spark's default of 100 entries every op after the
+        # first recompiled ~150 classes and HotSpot re-JITted them. A
+        # session created by an external driver (the vanilla-session
+        # replay) keeps the default of 100.
+        .config("spark.sql.codegen.cache.maxEntries", "4000")
         # one BLAS thread per Python worker: with `cpus` workers already
         # running data-parallel, nested OpenBLAS pools (workers x cores
         # threads) thrash the scheduler — the broadcast-kernel GEMMs in

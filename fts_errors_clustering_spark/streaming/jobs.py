@@ -8,14 +8,14 @@ sink. For tests/driver checks the sink is ``memory`` and
 the same plan writes to parquet/kafka with a real trigger.
 
 TEST-HARNESS ADAPTER BOUNDARY: every registry entry in this module ends
-with ``spark.createDataFrame(rows.collect(), ...)`` — that collect() is
-the memory-sink -> batch-DataFrame re-wrap the rows-only driver check
+by collecting its memory sink and re-wrapping the rows as a batch
+DataFrame (``_guarded_local``) — the re-wrap the rows-only driver check
 needs, NOT a production sink, and it is safe here only because each
 streamed result is window-aggregate-sized (bounded by #windows x #keys,
 never by input rows). A deployment takes the ``*_agg``/``*_gate`` plan
 builders above the runners and attaches ``writeStream`` directly; piping
 a real volume through these runner adapters would materialize the sink on
-the driver. ``_guarded_collect`` enforces that boundary at runtime.
+the driver. ``_guarded_local`` enforces that boundary at runtime.
 """
 
 from __future__ import annotations
@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.numeric import dec_sum, round_half_up
+from ..operators.graph import local_relation
 from ..sources.readers import table
 
 _STAGE_ROOT = "/root/repo/.tmp/stream_stage"
@@ -39,14 +40,17 @@ _STAGE_ROOT = "/root/repo/.tmp/stream_stage"
 _ADAPTER_MAX_ROWS = 2_000_000
 
 
-def _guarded_collect(rows):
-    got = rows.limit(_ADAPTER_MAX_ROWS + 1).collect()
-    if len(got) > _ADAPTER_MAX_ROWS:
+def _guarded_local(rows: DataFrame) -> DataFrame:
+    """``rows`` (a memory-sink table) re-wrapped as a JVM-built local
+    relation (``operators.graph.local_relation``), refusing results over
+    the adapter bound."""
+    got = rows.limit(_ADAPTER_MAX_ROWS + 1)._jdf.collectAsList()
+    if got.size() > _ADAPTER_MAX_ROWS:
         raise RuntimeError(
             "streaming test adapter: memory-sink result exceeds "
             f"{_ADAPTER_MAX_ROWS} rows — attach writeStream to the plan "
             "builder instead of using the test runner (see module header)")
-    return got
+    return local_relation(rows, got)
 
 
 def _stage_events(spark: SparkSession, sf_dir: str) -> str:
@@ -93,7 +97,7 @@ def run_tumbling_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.stop()
     # materialize before the sink table goes away with the stopped query
     rows = spark.table(name)
-    out = spark.createDataFrame(_guarded_collect(rows), schema=rows.schema)
+    out = _guarded_local(rows)
     return out
 
 
@@ -181,7 +185,7 @@ def run_stateful_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         q.stop()
     rows = spark.table(name)
-    return spark.createDataFrame(_guarded_collect(rows), schema=rows.schema)
+    return _guarded_local(rows)
 
 
 NEARDUP_OUT_SCHEMA = "doc_id long, band long, owner long"
@@ -259,7 +263,7 @@ def run_dedup_stream_with_recovery(spark: SparkSession, sf_dir: str,
         q2.stop()
 
     rows = spark.read.parquet(out_dir)
-    return spark.createDataFrame(_guarded_collect(rows), schema=rows.schema)
+    return _guarded_local(rows)
 
 
 def run_neardup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -340,7 +344,7 @@ def run_neardup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                       .otherwise(0)).cast("long").alias("n_hit_bands"))
            .select("doc_id", "n_hit_bands",
                    (F.col("n_hit_bands") > 0).alias("is_candidate")))
-    return spark.createDataFrame(_guarded_collect(out), schema=out.schema)
+    return _guarded_local(out)
 
 
 def run_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -378,7 +382,7 @@ def run_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = spark.table(name)
     out = (pairs.groupBy("event_id")
            .agg(F.count("*").cast("long").alias("n_prior_1h")))
-    return spark.createDataFrame(_guarded_collect(out), schema=out.schema)
+    return _guarded_local(out)
 
 
 # --- custom stateful operator: per-key cooldown (debounce) gate --------------
@@ -458,7 +462,7 @@ def run_debounce_stream(spark: SparkSession, sf_dir: str,
     finally:
         q.stop()
     rows = spark.table(name)
-    return spark.createDataFrame(_guarded_collect(rows), schema=rows.schema)
+    return _guarded_local(rows)
 
 
 # --- foreachBatch upsert sink: latest-wins CDC compaction -------------------
@@ -520,7 +524,7 @@ def run_upsert_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         q.stop()
     rows = spark.read.parquet(state_dir)
-    out = spark.createDataFrame(_guarded_collect(rows), schema=rows.schema)
+    out = _guarded_local(rows)
     shutil.rmtree(state_dir, ignore_errors=True)
     shutil.rmtree(state_dir + "_ckpt", ignore_errors=True)
     return out
@@ -622,7 +626,7 @@ def run_interarrival_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         q.stop()
     rows = spark.table(name)
-    mat = spark.createDataFrame(_guarded_collect(rows), schema=rows.schema)
+    mat = _guarded_local(rows)
     return interarrival_stats(mat)
 
 
@@ -652,7 +656,7 @@ def run_hourly_cusum_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         q.stop()
     rows = spark.table(name)
-    mat = spark.createDataFrame(_guarded_collect(rows), schema=rows.schema)
+    mat = _guarded_local(rows)
     return cusum_tail(mat)
 
 
@@ -721,7 +725,7 @@ def run_funnel_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         q.stop()
     rows = spark.table(name)
-    mat = spark.createDataFrame(_guarded_collect(rows), schema=rows.schema)
+    mat = _guarded_local(rows)
     counts = {r["stage"]: r["n"] for r in
               mat.groupBy("stage").agg(F.count("*").alias("n")).collect()}
     n1, n2, n3 = (counts.get(1, 0), counts.get(2, 0), counts.get(3, 0))
@@ -766,7 +770,7 @@ def run_hq_rollup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         q.stop()
     rows = spark.table(name)
-    mat = spark.createDataFrame(_guarded_collect(rows), schema=rows.schema)
+    mat = _guarded_local(rows)
     ev = spark.read.parquet(staged).where(F.col("value").isNotNull())
     exact = (ev.groupBy(F.date_trunc("week", "ts").alias("week"))
              .agg(F.expr("percentile(value, 0.5)").alias("exact_median")))

@@ -267,3 +267,37 @@ def test_propagation_chain_graph_log_rounds(spark):
     rows = out.collect()
     assert len(rows) == n
     assert all(r.cluster == 0 for r in rows)
+
+
+def test_kernel_pairs_partition_invariant(spark, monkeypatch):
+    """Both broadcast kernels must emit the identical pair sets whether
+    the streaming side runs in one partition or is spread over the
+    default parallelism. ``_spread`` sizes the spread from the pair count:
+    the fixture is small, so it stays in its one partition (no shuffle);
+    a side of 16,384 rows (2^28 pairs) is spread."""
+    from fts_errors_clustering_spark.operators import pairwise
+    from fts_errors_clustering_spark.operators.pairwise import (
+        eps_pairs_broadcast, topk_candidate_pairs)
+
+    emb = table(spark, SF_SMALL, "embeddings").coalesce(1)
+    n = emb.count()
+    par = spark.sparkContext.defaultParallelism
+    assert par > 1
+
+    def pairs():
+        topk = topk_candidate_pairs(emb, "vec_id", "embedding", 5)
+        eps = eps_pairs_broadcast(emb, "vec_id", "embedding", EPS)
+        return (topk.rdd.getNumPartitions(), eps.rdd.getNumPartitions(),
+                set(map(tuple, topk.collect())),
+                set(map(tuple, eps.collect())))
+
+    small = pairwise._spread(emb, n)
+    assert small.rdd.getNumPartitions() == 1
+    assert "Exchange" not in small._jdf.queryExecution().executedPlan().toString()
+    assert pairwise._spread(emb, 16_384).rdd.getNumPartitions() == par
+    one = pairs()
+    monkeypatch.setattr(pairwise, "PAIRS_PER_TASK", 1)
+    spread = pairs()
+    assert one[:2] == (1, 1) and spread[:2] == (par, par)
+    assert one[2] and one[3]
+    assert one[2:] == spread[2:]

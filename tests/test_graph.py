@@ -4,9 +4,14 @@ determinism — the properties the unrolled-CTE oracle can't see by itself
 
 from __future__ import annotations
 
+import datetime as dt
+import decimal
+import os
+
 from pyspark.sql import functions as F
 
-from fts_errors_clustering_spark.operators.graph import _pagerank
+from fts_errors_clustering_spark.operators.graph import (_pagerank,
+                                                         materialize_release)
 
 from .conftest import SF_SMALL  # noqa: F401  (fixture parity w/ suite style)
 
@@ -179,3 +184,71 @@ def test_graph_queries_leave_no_persistent_rdds(spark):
         out = defs[q].fn(spark, SF_SMALL)
         assert out.collect()  # bounded local relation; driver-style consume
         assert _persist_ids(spark) == before, f"{q} leaked persistent RDDs"
+
+
+def _python_worker_cpu_s() -> float:
+    """CPU seconds (own + reaped children) of the Python processes below
+    this one: the PySpark daemon and its workers under the driver JVM."""
+    tick = os.sysconf("SC_CLK_TCK")
+    kids: dict[int, list] = {}
+    for pid in filter(str.isdigit, os.listdir("/proc")):
+        try:
+            with open(f"/proc/{pid}/stat") as f:
+                stat = f.read()
+        except OSError:
+            continue
+        lp, rp = stat.index("("), stat.rindex(")")
+        rest = stat[rp + 2:].split()  # rest[1] = ppid, rest[11:15] = times
+        kids.setdefault(int(rest[1]), []).append(
+            (int(pid), stat[lp + 1:rp], rest))
+    total, stack = 0.0, [os.getpid()]
+    while stack:
+        for pid, comm, rest in kids.get(stack.pop(), []):
+            stack.append(pid)
+            if comm.startswith("python"):
+                total += sum(int(x) for x in rest[11:15]) / tick
+    return total
+
+
+def test_materialize_release_rehydrates_in_jvm(spark):
+    """``materialize_release`` must return the same schema and rows as the
+    Python re-wrap ``createDataFrame(collected_rows, schema)`` over every
+    column type the engine emits — including a null struct whose fields
+    are declared non-null — as a ``LocalRelation`` whose consumption runs
+    no job and no Python worker, with its caches released."""
+    schema = ("i int, b bigint, d double, s string, ts timestamp, dd date, "
+              "dec decimal(12,3), arr array<int>, st struct<x:int,y:string>, "
+              "m map<string,int>, flag boolean")
+    rows = [(1, None, 1.5, "a", dt.datetime(2024, 1, 2, 3, 4, 5, 123456),
+             dt.date(2024, 1, 2), decimal.Decimal("1.250"), [1, None, 3],
+             (1, "q"), {"k": 1}, True),
+            (None, 7, -0.25, None, None, None, None, None, None, None,
+             None)]
+    df = (spark.createDataFrame(rows, schema)
+          .withColumn("nn", F.when(F.col("i").isNotNull(),
+                                   F.struct(F.lit(1).alias("p"),
+                                            F.lit("z").alias("q"))))
+          .cache())
+    assert not df.schema["nn"].dataType.fields[0].nullable
+    want = spark.createDataFrame(df.collect(), df.schema)
+
+    out = materialize_release(df, [df])
+    assert not df.is_cached
+    assert (out._jdf.queryExecution().analyzed().getClass().getSimpleName()
+            == "LocalRelation")
+    assert out.schema == want.schema == df.schema
+
+    sc = spark.sparkContext
+    sc.setJobGroup("materialize-release-consume", "rehydration test")
+    try:
+        cpu0 = _python_worker_cpu_s()
+        got = out.collect()
+        cpu = _python_worker_cpu_s() - cpu0
+        jobs = sc.statusTracker().getJobIdsForGroup(
+            "materialize-release-consume")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert got == want.collect()
+    assert jobs == []
+    assert cpu <= 0.01, cpu

@@ -483,3 +483,40 @@ def test_exchange_budgets(spark):
         if got > budget:
             over.append((name, got, budget))
     assert not over, f"shuffle budget exceeded: {over}"
+
+
+#: Spark jobs one warm call submits at sf0.001 (the call and the consumer's
+#: collect, under one job group). Deterministic for a fixed input and plan;
+#: AQE's broadcast and stage threads inherit the group and are counted.
+_FLOW_JOBS = {"pipeline_tfidf_kmeans": 13, "pipeline_word2vec_dbscan": 36}
+
+
+def test_cluster_flows_reuse_codegen_and_pin_job_counts(spark):
+    """A cluster op (flow A then flow B), repeated on the same input, must
+    compile no new whole-stage classes: the two flows need more classes
+    than Spark's default 100-entry codegen cache holds, so at that size
+    every op recompiled them; the cache sized in ``get_spark`` keeps them.
+    Each flow must also submit a pinned number of Spark jobs per call."""
+    from fts_errors_clustering_spark.plans.registry import \
+        release_consumer_caches
+
+    sc = spark.sparkContext
+    compiled = (sc._jvm.org.apache.spark.metrics.source.CodegenMetrics
+                .METRIC_COMPILATION_TIME())
+    compiles, jobs = [], {name: [] for name in _FLOW_JOBS}
+    for op in range(3):
+        c0 = compiled.getCount()
+        for name in _FLOW_JOBS:
+            group = f"codegen-reuse-{name}-{op}"
+            sc.setJobGroup(group, name)
+            try:
+                _DEFS[name].fn(spark, SF_SMALL).collect()
+                release_consumer_caches()
+                jobs[name].append(
+                    len(sc.statusTracker().getJobIdsForGroup(group)))
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.description", None)
+        compiles.append(compiled.getCount() - c0)
+    assert compiles[1:] == [0, 0], compiles
+    assert jobs == {name: [n] * 3 for name, n in _FLOW_JOBS.items()}, jobs

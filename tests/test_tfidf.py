@@ -292,3 +292,61 @@ def test_rsvd_trailing_empty_vector(spark):
             assert got[i] <= 1e-12, (i, got[i])
         else:
             assert abs(got[i] - rn) / rn <= 1e-9, (i, got[i], rn)
+
+
+def test_gram_bit_identical_to_chunked_partition_fold(spark):
+    """The gram tier's G (and so its explained variance) must equal, bit
+    for bit, the summation order of the rdd ``treeReduce`` form it
+    replaced: per partition, ``_GRAM_CHUNK``-row X^T X products summed
+    from zeros, the partials folded in partition order. Three partitions,
+    the middle one empty, the others crossing a chunk boundary; dense and
+    sparse vectors mixed."""
+    import numpy as np
+    from pyspark.ml.functions import vector_to_array
+    from pyspark.ml.linalg import Vectors, VectorUDT
+    from pyspark.sql import types as T
+
+    from fts_errors_clustering_spark.operators import tfidf
+
+    d, k = 12, 4
+    rng = np.random.default_rng(11)
+    parts, doc = [], 0
+    for size in (2500, 0, 1100):
+        rows = []
+        for _ in range(size):
+            x = rng.random(d) * (rng.random(d) < 0.4)
+            nz = np.nonzero(x)[0]
+            v = (Vectors.sparse(d, nz.tolist(), x[nz].tolist()) if doc % 2
+                 else Vectors.dense(x.tolist()))
+            rows.append((doc, v))
+            doc += 1
+        parts.append(rows)
+    schema = T.StructType([T.StructField("doc_id", T.LongType()),
+                           T.StructField("features", VectorUDT())])
+    rdd = spark.sparkContext.parallelize(range(3), 3).flatMap(
+        lambda i: parts[i])
+    df = spark.createDataFrame(rdd, schema)
+    assert df.rdd.glom().map(len).collect() == [2500, 0, 1100]
+
+    ref = None
+    for rows in parts:
+        Gp, chunk = np.zeros((d, d)), []
+        for _, v in rows:
+            chunk.append(v.toArray())
+            if len(chunk) == tfidf._GRAM_CHUNK:
+                X = np.asarray(chunk)
+                Gp += X.T @ X
+                chunk = []
+        if chunk:
+            X = np.asarray(chunk)
+            Gp += X.T @ X
+        ref = Gp if ref is None else ref + Gp
+
+    G = tfidf._gram(df.select(vector_to_array("features").alias("x")), d)
+    assert G.tobytes() == ref.tobytes()
+
+    evals = np.linalg.eigh(ref)[0]
+    lam = np.clip(evals[np.argsort(evals)[::-1][:k]], 0.0, None)
+    ref_ev = float(lam.sum()) / max(float(np.trace(ref)), 1e-300)
+    _, ev = tfidf._gram_svd(df, k, "doc_id", "features", d)
+    assert ev == ref_ev
