@@ -21,8 +21,6 @@ DuckDB.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -92,33 +90,3 @@ def dot_agg(a: Column | str, b: Column | str) -> Column:
     prods = F.zip_with(ca, cb, lambda x, y: x.cast("double") * y.cast("double"))
     return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
 
-
-def euclidean_arrow(a: str, b: str) -> Column:
-    """Arrow-vectorized exact euclidean distance, BIT-IDENTICAL to
-    ``euclidean``'s left-to-right fold (and therefore to the oracle's
-    explicit SQL chain): the numpy accumulator adds d_i*d_i in dimension
-    order, reproducing ((0 + d_0^2) + d_1^2) + ... exactly — np.sum /
-    einsum would pairwise-sum and differ in the last ULP.
-
-    Why it exists: Catalyst higher-order functions run INTERPRETED per
-    element, so the HOF fold pays ~dim lambda evaluations per row — the
-    whole cost of the kNN exact re-rank at candidate scale (measured:
-    the 2.8M x 64 re-rank dominated a 21 s kNN pass at 10x fixtures).
-    This kernel does the same arithmetic at Arrow-batch speed. Bit
-    equality with the HOF form is asserted in tests/test_similarity.py.
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def _eu(xa: pd.Series, xb: pd.Series) -> pd.Series:
-        if not len(xa):
-            return pd.Series(np.empty(0, dtype=np.float64))
-        A = np.stack(xa.values).astype(np.float64, copy=False)
-        B = np.stack(xb.values).astype(np.float64, copy=False)
-        acc = np.zeros(len(A), dtype=np.float64)
-        for i in range(A.shape[1]):  # dimension order == SQL fold order
-            d = A[:, i] - B[:, i]
-            acc += d * d
-        return pd.Series(np.sqrt(acc))
-
-    return _eu(F.col(a), F.col(b))

@@ -7,14 +7,15 @@ The reference fits ``sklearn.NearestNeighbors`` on the dense embedding
 matrix, column-sorts the distance matrix and takes per-row means, then runs
 ``kneed.KneeLocator``. Here:
 
-- M16 = numpy-kernel candidate pruning (``operators/pairwise.py``: n-1
-  candidates per point -> ~k, at BLAS speed) + exact re-rank of the pruned
-  pairs with the oracle-exact column expression + per-point window top-k +
-  exact decimal mean. The distance values that reach the (value-hashed)
-  output are computed by the SAME IEEE operation sequence as the DuckDB
-  oracle; the kernel only prunes. The 100 TB path swaps the kernel for
-  ``BucketedRandomProjectionLSH.approxSimilarityJoin`` (see
-  operators/similarity.py) with the SAME downstream re-rank/window plan.
+- M16 = one numpy-kernel pass (``operators/pairwise.topk_candidate_pairs``)
+  that prunes n-1 candidates per point to ~k at BLAS speed, ranks them by
+  exact distance and emits each point's top k, then an exact decimal mean
+  per point. The distances are the ``euclidean`` fold (the SAME IEEE
+  operation sequence as the DuckDB oracle's SQL chain), ranked by
+  ``(dist, other_id)`` exactly as the oracle's window; the GEMM pass only
+  prunes. The 100 TB path swaps the kernel's broadcast candidate
+  source for ``BucketedRandomProjectionLSH.approxSimilarityJoin`` (see
+  operators/similarity.py).
 - M17 = the Kneedle difference-curve on the sorted means, restated as pure
   window algebra: normalize x and y to [0,1], knee = argmax(x_hat - y_hat)
   (the convex-increasing case of Kneedle; the reference's sensitivity sweep
@@ -35,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.vectors import euclidean_arrow, sql_euclidean
+from ..functions.vectors import sql_euclidean
 from ..plans.registry import register
 from ..sources.readers import table
 from .pairwise import topk_candidate_pairs
@@ -74,18 +75,8 @@ def knn_mean_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     # banker's; sqrt(int) landing on an exact .5 is ~impossible in
     # binary, but the k derivation should not depend on that argument)
     k = int(n ** 0.5 + 0.5)
-    cand = topk_candidate_pairs(emb, "vec_id", "embedding", k)
-    a = emb.select(F.col("vec_id").alias("vec_id"),
-                   F.col("embedding").alias("ea"))
-    b = emb.select(F.col("vec_id").alias("other_id"),
-                   F.col("embedding").alias("eb"))
-    pairs = (cand.join(F.broadcast(a), cand.a == a.vec_id)
-             .join(F.broadcast(b), cand.b == b.other_id)
-             .select("vec_id", "other_id",
-                     euclidean_arrow("ea", "eb").alias("dist")))
-    w = Window.partitionBy("vec_id").orderBy(F.asc("dist"), F.asc("other_id"))
-    topk = pairs.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= k)
-    return (topk.groupBy("vec_id")
+    topk = topk_candidate_pairs(emb, "vec_id", "embedding", k)
+    return (topk.groupBy(F.col("a").alias("vec_id"))
             .agg((F.sum(F.col("dist").cast("decimal(27,18)"))
                    .cast("string").cast("double") / F.count("*"))
                  .alias("mean_dist")))
@@ -136,7 +127,7 @@ def _indexed_curve(knn: DataFrame,
     # pass; measured as one fewer exchange + one fewer stage in every
     # curve consumer)
     offm = bucket_prefix_offsets_multi(
-        bucketed, cnt=F.count("*"),
+        bucketed, maps=("cnt",), cnt=F.count("*"),
         mn=F.min("mean_dist"), mx=F.max("mean_dist"))
     rows = offm["rows"]
     n = sum(r["cnt"] for r in rows)

@@ -23,15 +23,16 @@ This module is the Spark-shaped equivalent of that dense-matrix speed:
   GEMM is only ever a pruner, with a relative guard band wide enough
   (1e-6) to cover its error (~1e-12).
 
-Exactness contract: emitted *memberships* (eps-pairs, top-k candidate sets)
-are exact w.r.t. real-number semantics up to float summation order — the
-difference-form numpy sum can disagree with a strictly left-to-right SQL
-sum in the last bits, which flips a comparison only if a pair sits within
-~1e-12 of the threshold (asserted not to happen on the fixtures in
-tests/test_dbscan.py). Distance *values* that feed value-hashed query
-output are NOT taken from this kernel — callers re-compute them with the
-oracle-exact column expressions of ``functions/vectors.py`` on the pruned
-candidate set (see operators/knn.py).
+Exactness contract: emitted eps-pair *memberships* are exact w.r.t.
+real-number semantics up to float summation order — the difference-form
+numpy sum can disagree with a strictly left-to-right SQL sum in the last
+bits, which flips a comparison only if a pair sits within ~1e-12 of the
+threshold (asserted not to happen on the fixtures in tests/test_dbscan.py).
+The top-k kernel's GEMM pass only prunes to a candidate superset; the
+distances it emits and ranks by are the left-to-right fold of
+``functions/vectors.euclidean`` (float32 widened to float64, ``acc += d*d``
+in dimension order, then sqrt), so they are bit-identical to the
+oracle's explicit SQL chain and feed value-hashed output directly.
 """
 
 from __future__ import annotations
@@ -40,7 +41,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-__all__ = ["eps_pairs_broadcast", "topk_candidate_pairs"]
+__all__ = ["eps_pairs_broadcast", "spread", "topk_candidate_pairs"]
 
 #: cap on floats per GEMM output chunk (rows_in_batch x chunk) ~ 64 MB
 _CHUNK_BUDGET = 8 * 1024 * 1024
@@ -105,28 +106,35 @@ def _broadcast_matrix(emb: DataFrame, id_col: str, vec_col: str):
 #: one BLAS thread per worker): the kernel's numpy work is ~0.025 CPU-s at
 #: 1,000 x 32 embeddings (10^6 pairs) and ~0.5 CPU-s at 2^24 pairs, while
 #: each extra Python task costs ~0.15-0.2 CPU-s whatever its rows —
-#: topk_candidate_pairs plus its euclidean_arrow re-rank over 1,000 x 32
-#: took 1.4-2.1 CPU-s per call in 1 task and 2.7-2.9 CPU-s spread over 4.
-#: At 2^24 pairs a task's work outweighs its start-up.
+#: topk_candidate_pairs plus its then-separate exact re-rank over
+#: 1,000 x 32 took 1.4-2.1 CPU-s per call in 1 task and 2.7-2.9 CPU-s
+#: spread over 4. At 2^24 pairs a task's work outweighs its start-up.
 PAIRS_PER_TASK = 1 << 24
 
 
-def _spread(emb: DataFrame, n_b: int) -> DataFrame:
-    """Repartition the kernel's STREAMING side when the kernel's work pays
-    for more tasks: the target is ``min(defaultParallelism,
-    ceil(n_b^2 / PAIRS_PER_TASK))``, sized from the broadcast side's row
-    count ``n_b`` (the streaming side is the same table, so n_b^2 is the
-    pair count), which the driver already holds — no extra job. A small
-    input keeps its partitioning (no shuffle); an underpartitioned large
-    one (e.g. a 1-2 file parquet scan or a cached ml-transform output) is
-    spread so the GEMM + Arrow emit do not run on as many cores as there
-    are input partitions. A no-op whenever the input already has at least
-    the target's partitions."""
+def spread(df: DataFrame, target: int) -> DataFrame:
+    """``df`` repartitioned to ``target`` partitions when it has fewer, else
+    ``df`` itself (no shuffle). For per-row CPU-heavy stages whose input can
+    arrive underpartitioned — a 1-2 file parquet scan or a cached
+    ml-transform output keeps that file count through every narrow
+    operator and broadcast join, so the stage would run on that many
+    cores. At scale the input already has the partitions and this is a
+    no-op."""
+    if target > 1 and df.rdd.getNumPartitions() < target:
+        return df.repartition(target)
+    return df
+
+
+def _stream_side(emb: DataFrame, id_col: str, vec_col: str,
+                 n_b: int) -> DataFrame:
+    """The kernels' streaming side, spread over ``min(defaultParallelism,
+    ceil(n_b^2 / PAIRS_PER_TASK))`` tasks: sized from the broadcast side's
+    row count ``n_b`` (the streaming side is the same table, so n_b^2 is
+    the pair count), which the driver already holds — no extra job. A
+    small input keeps its partitioning."""
     target = min(emb.sparkSession.sparkContext.defaultParallelism,
                  (n_b * n_b + PAIRS_PER_TASK - 1) // PAIRS_PER_TASK)
-    if target > 1 and emb.rdd.getNumPartitions() < target:
-        return emb.repartition(target)
-    return emb
+    return spread(emb.select(id_col, vec_col), target)
 
 
 def eps_pairs_broadcast(emb: DataFrame, id_col: str, vec_col: str,
@@ -189,15 +197,26 @@ def eps_pairs_broadcast(emb: DataFrame, id_col: str, vec_col: str,
                     "a": np.concatenate(out_a),
                     "b": np.concatenate(out_b)})
 
-    return _spread(emb.select(id_col, vec_col), n_b).mapInPandas(gen, "a long, b long")
+    return _stream_side(emb, id_col, vec_col, n_b).mapInPandas(
+        gen, "a long, b long")
 
 
 def topk_candidate_pairs(emb: DataFrame, id_col: str, vec_col: str,
                          k: int) -> DataFrame:
-    """Candidate (a, b) pairs per point a: a SUPERSET of a's exact k nearest
-    neighbors (self excluded), pruned from n-1 to ~k by numpy distance with
-    a slack band covering GEMM error and exact-vs-numpy summation-order
-    skew. Callers re-rank with the oracle-exact distance expression."""
+    """Exact k nearest neighbours ``(a, b, dist)`` of every point a (self
+    excluded): the first k of a's neighbours ordered by ``(dist, b)``, the
+    rows ``ROW_NUMBER() OVER (PARTITION BY a ORDER BY dist, b) <= k`` of
+    the full pair table would keep, emitted per a in that order.
+
+    One task does the whole top-k for its rows: a GEMM pass prunes n-1
+    candidates per point to ~k (every pair within a slack band of the
+    k-th smallest GEMM distance, which covers GEMM error and ties), then
+    each candidate's distance is the ``euclidean`` fold — float64, ``acc
+    += d*d`` in dimension order, sqrt — bit-identical to the HOF column
+    expression and the oracle's SQL chain, and the candidates are ranked
+    by it. Because a's rows come out in ``(dist, b)`` order from one
+    task, a per-a sum over them (a partial aggregate adds a key's rows in
+    input order) is the same double the window plan's sum was."""
     bc, n_b = _broadcast_side(emb, id_col, vec_col)
     k = int(k)
 
@@ -239,6 +258,18 @@ def topk_candidate_pairs(emb: DataFrame, id_col: str, vec_col: str,
                 kth = sc[:, kk - 1]
                 thresh = kth * (1.0 + 1e-9) + 1e-9
                 ai, bi = np.nonzero(g <= thresh[:, None])
-                yield pd.DataFrame({"a": a_ids[ai], "b": b_ids[bi]})
+                acc = np.zeros(len(ai))
+                for d in range(A.shape[1]):  # dimension order == SQL fold
+                    diff = A[ai, d] - B[bi, d]
+                    acc += diff * diff
+                dist = np.sqrt(acc)
+                o = np.lexsort((b_ids[bi], dist, ai))
+                ai, bi, dist = ai[o], bi[o], dist[o]
+                # rank within a's run of the (a, dist, b)-sorted candidates
+                keep = (np.arange(len(ai)) - np.searchsorted(ai, ai)) < k
+                yield pd.DataFrame({"a": a_ids[ai[keep]],
+                                    "b": b_ids[bi[keep]],
+                                    "dist": dist[keep]})
 
-    return _spread(emb.select(id_col, vec_col), n_b).mapInPandas(gen, "a long, b long")
+    return _stream_side(emb, id_col, vec_col, n_b).mapInPandas(
+        gen, "a long, b long, dist double")

@@ -20,7 +20,7 @@ Model-backed -> rows-only driver checks; invariants in tests.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import fuzz_ratio, mask_error_text, whitespace_tokens
@@ -92,33 +92,35 @@ def pipeline_word2vec_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
            .cache())
 
     # knee-derived epsilon on the doc embeddings (M16+M17 inline, dim=32):
-    # numpy-kernel candidate pruning + exact re-rank — the knn.py plan, NOT
-    # the O(n^2)-pairs-through-an-expression cross join (the anti-pattern
+    # the numpy kernel returns each doc's exact top-k (a, b, dist) in
+    # (dist, b) order — the knn.py plan, NOT the
+    # O(n^2)-pairs-through-an-expression cross join (the anti-pattern
     # pairwise.py's header documents as ~134 s of a 135 s run)
-    from ..functions.vectors import euclidean_arrow
-    from .pairwise import topk_candidate_pairs
-    n = emb.count()
+    from .pairwise import _broadcast_side, spread, topk_candidate_pairs
+    # n comes with the kernel's broadcast side, collected once and cached
+    # by plan (the kernel call below hits that cache), so sizing k costs
+    # no job of its own
+    n = _broadcast_side(emb, "doc_id", "embedding")[1]
     k = max(2, int(round(n ** 0.5)))
-    cand = topk_candidate_pairs(emb, "doc_id", "embedding", k)
-    a = emb.select(F.col("doc_id").alias("i"), F.col("embedding").alias("va"))
-    b = emb.select(F.col("doc_id").alias("j"), F.col("embedding").alias("vb"))
-    pairs = (cand.join(F.broadcast(a), cand.a == a.i)
-             .join(F.broadcast(b), cand.b == b.j)
-             .select("i", "j", euclidean_arrow("va", "vb").alias("dist")))
-    w = Window.partitionBy("i").orderBy(F.asc("dist"), F.asc("j"))
-    knn = (pairs.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= k)
-           .groupBy("i").agg(F.avg("dist").alias("mean_dist")))
+    knn = (topk_candidate_pairs(emb, "doc_id", "embedding", k)
+           .groupBy("a").agg(F.avg("dist").alias("mean_dist")))
     # distributed knee (knn.py plan): only the 1-row argmax reaches the
     # driver — never the per-point curve (at 10^9 embeddings a curve
     # collect() is a multi-GB driver pull). If the knee lands degenerate on
     # a given corpus (one giant cluster — the reference hit this and
     # hand-set eps=20), pass eps to dbscan_labels explicitly.
     from .knn import knee_epsilon_value
-    eps = knee_epsilon_value(knn, id_col="i")
+    eps = knee_epsilon_value(knn, id_col="a")
 
     labels = dbscan_labels(spark, emb, id_col="doc_id", dim=32,
                            eps=float(eps), min_pts=5)
-    joined = emb.join(labels, "doc_id")  # in-row by id, never positional
+    # in-row by id, never positional. The fuzz_ratio levenshtein below is
+    # per-row CPU, and the broadcast join keeps emb's partitioning, which
+    # a 1-file scan leaves at one partition — so the join's streaming side
+    # is spread over every core. (Spread here, not after the join: reading
+    # the joined plan's partition count would run its broadcast stage.)
+    joined = spread(emb, spark.sparkContext.defaultParallelism).join(
+        labels, "doc_id")
     # representative text per cluster via min_by + broadcast join, NOT a
     # partitionBy(cluster) window: a dominant cluster (the knee's eps is
     # degenerate on this corpus, as in the reference notebook) would put
@@ -133,8 +135,9 @@ def pipeline_word2vec_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.round(F.avg("sim"), 4).alias("mean_similarity"),
                 F.round(F.stddev("sim"), 4).alias("std_similarity"))
            .orderBy("cluster"))
-    # the emb cache served this fn's EAGER phases (count, candidate kNN,
-    # knee epsilon, the DBSCAN tier's own materialization) and the returned
+    # the emb cache served this fn's EAGER phases (the kNN kernel's
+    # broadcast collect and its streaming side, the knee epsilon, the
+    # DBSCAN tier's own materialization) and the returned
     # plan references it once more (the `joined` scan) — hand it to the
     # consumer-release protocol instead of unpersisting here, so the final
     # materialization reads the cached block instead of re-paying a full

@@ -6,9 +6,6 @@ The reference creates its session at
 for it (schema inference, 200 default shuffle partitions). Here we pin the
 configs that matter for a local[N] run and for DuckDB-oracle comparability:
 
-- ``spark.sql.shuffle.partitions`` ~= cores: the fixtures are small enough
-  that 200 partitions is pure scheduling overhead; on a real cluster this
-  would be sized to ~2-3x total cores and AQE coalesces the rest.
 - AQE on: runtime re-planning (partition coalescing, skew-join splitting)
   is the 100 TB safety net for every shuffle this engine emits.
 - session timezone UTC: parquet timestamps must collect identically in

@@ -272,9 +272,9 @@ def test_propagation_chain_graph_log_rounds(spark):
 def test_kernel_pairs_partition_invariant(spark, monkeypatch):
     """Both broadcast kernels must emit the identical pair sets whether
     the streaming side runs in one partition or is spread over the
-    default parallelism. ``_spread`` sizes the spread from the pair count:
-    the fixture is small, so it stays in its one partition (no shuffle);
-    a side of 16,384 rows (2^28 pairs) is spread."""
+    default parallelism. ``_stream_side`` sizes the spread from the pair
+    count: the fixture is small, so it stays in its one partition (no
+    shuffle); a side of 16,384 rows (2^28 pairs) is spread."""
     from fts_errors_clustering_spark.operators import pairwise
     from fts_errors_clustering_spark.operators.pairwise import (
         eps_pairs_broadcast, topk_candidate_pairs)
@@ -291,13 +291,66 @@ def test_kernel_pairs_partition_invariant(spark, monkeypatch):
                 set(map(tuple, topk.collect())),
                 set(map(tuple, eps.collect())))
 
-    small = pairwise._spread(emb, n)
+    small = pairwise._stream_side(emb, "vec_id", "embedding", n)
     assert small.rdd.getNumPartitions() == 1
     assert "Exchange" not in small._jdf.queryExecution().executedPlan().toString()
-    assert pairwise._spread(emb, 16_384).rdd.getNumPartitions() == par
+    assert pairwise._stream_side(
+        emb, "vec_id", "embedding", 16_384).rdd.getNumPartitions() == par
     one = pairs()
     monkeypatch.setattr(pairwise, "PAIRS_PER_TASK", 1)
     spread = pairs()
     assert one[:2] == (1, 1) and spread[:2] == (par, par)
     assert one[2] and one[3]
     assert one[2:] == spread[2:]
+
+
+def _window_topk(emb, k: int, dim: int):
+    """The exact top-k as the oracle states it: every pair a != b, the
+    ``euclidean`` HOF fold, ``row_number() <= k`` by (dist, b). The full
+    pair table stands in for the kernel's candidates: it is their
+    superset, so this also checks the pruning."""
+    from pyspark.sql import Window
+
+    from fts_errors_clustering_spark.functions.vectors import euclidean
+    a = emb.select(F.col("vec_id").alias("a"), F.col("embedding").alias("va"))
+    b = emb.select(F.col("vec_id").alias("b"), F.col("embedding").alias("vb"))
+    w = Window.partitionBy("a").orderBy("dist", "b")
+    return (a.join(b, F.col("a") != F.col("b"))
+            .select("a", "b", euclidean("va", "vb", dim).alias("dist"))
+            .withColumn("rn", F.row_number().over(w))
+            .where(F.col("rn") <= k).select("a", "b", "dist"))
+
+
+@pytest.mark.parametrize("fixture", ["embeddings", "ties"])
+@pytest.mark.parametrize("spread", [False, True])
+def test_topk_kernel_equals_window_plan(spark, monkeypatch, fixture, spread):
+    """The top-k kernel's (a, b, dist) rows must equal the window plan's
+    bit for bit — on the sf0.001 embeddings and on a fixture of repeated
+    vectors whose k-th neighbour sits inside a run of equal distances —
+    with the streaming side in one partition and spread over the default
+    parallelism. Each a's rows must come out in (dist, b) order, the
+    order a per-a sum over them relies on."""
+    from fts_errors_clustering_spark.operators import pairwise
+
+    if fixture == "embeddings":
+        emb, k, dim = table(spark, SF_SMALL, "embeddings"), 22, 64
+    else:
+        # 6 distinct vectors x 8 copies, ids not in vector order: every
+        # point has 7 zero-distance neighbours, then runs of equal ones
+        emb = spark.createDataFrame(
+            [((i * 37) % 101, [float(i % 3), float((i // 3) % 2), 0.0, 1.0])
+             for i in range(48)], "vec_id long, embedding array<float>")
+        k, dim = 10, 4
+    emb = emb.coalesce(1)
+    par = spark.sparkContext.defaultParallelism
+    if spread:
+        monkeypatch.setattr(pairwise, "PAIRS_PER_TASK", 1)
+    topk = pairwise.topk_candidate_pairs(emb, "vec_id", "embedding", k)
+    assert topk.rdd.getNumPartitions() == (par if spread else 1)
+    rows = [tuple(r) for r in topk.collect()]
+    assert sorted(rows) == sorted(tuple(r) for r in
+                                  _window_topk(emb, k, dim).collect())
+    per_a: dict[int, list] = {}
+    for a, b, dist in rows:
+        per_a.setdefault(a, []).append((dist, b))
+    assert all(v == sorted(v) and len(v) == k for v in per_a.values())

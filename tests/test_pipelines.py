@@ -29,6 +29,53 @@ def test_word2vec_dbscan_pipeline(spark):
             assert 0.0 <= r.mean_similarity <= 100.0
 
 
+def test_word2vec_dbscan_fuzz_stage_spread(spark, monkeypatch):
+    """Flow B's fuzz_ratio stage must run on every core: the sf0.001
+    documents scan is one partition, so left alone the whole levenshtein
+    stage is one task. The rows must be the same either way, and
+    ``spread`` must leave an input that has enough partitions alone."""
+    from fts_errors_clustering_spark.cli import _canon
+    from fts_errors_clustering_spark.operators import pairwise
+    from fts_errors_clustering_spark.plans.registry import \
+        release_consumer_caches
+
+    sc = spark.sparkContext
+    par = sc.defaultParallelism
+
+    def run(group):
+        df = pipeline_word2vec_dbscan(spark, SF_SMALL)
+        sc.setJobGroup(group, group)
+        try:
+            rows = df.collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        release_consumer_caches()
+        # the fuzz stage is the collect's CPU-heaviest stage (the
+        # levenshtein over every doc); the status store has its task count
+        st, store = sc.statusTracker(), sc._jsc.sc().statusStore()
+        stages = [store.lastStageAttempt(sid)
+                  for jid in st.getJobIdsForGroup(group)
+                  for sid in st.getJobInfo(jid).stageIds]
+        fuzz = max(stages, key=lambda d: d.executorCpuTime())
+        return _canon(df.columns, rows), fuzz.numCompleteTasks()
+
+    spread_rows, spread_tasks = run("fuzz-spread")
+    n_docs = 500  # sf0.001 documents, none blank
+    assert spread_tasks >= min(par, n_docs)
+    with monkeypatch.context() as m:
+        m.setattr(pairwise, "spread", lambda df, target: df)
+        one_rows, one_tasks = run("fuzz-one")
+    assert one_tasks == 1
+    assert one_rows == spread_rows
+
+    wide = spark.range(0, 100, 1, par)
+    assert pairwise.spread(wide, par) is wide
+    assert pairwise.spread(wide, 2) is wide
+    narrow = wide.coalesce(1)
+    assert pairwise.spread(narrow, par).rdd.getNumPartitions() == par
+
+
 def test_knee_epsilon_matches_collect_form(spark):
     """The distributed knee (bucket prefix-sum index + 1-row argmax) must
     produce the SAME epsilon as the driver-side sorted-curve form it

@@ -71,23 +71,21 @@ def test_multimodal_metadata_prunes_payload(spark):
 def test_kernel_pairs_no_nested_loop(spark):
     """The pairwise kernel path (used by kNN, DBSCAN, and pipeline B's
     inner kNN) must contain no BroadcastNestedLoopJoin / CartesianProduct —
-    the O(n^2)-pairs-through-an-expression anti-pattern it replaced."""
-    from fts_errors_clustering_spark.functions.vectors import euclidean
+    the O(n^2)-pairs-through-an-expression anti-pattern it replaced — and
+    the per-point aggregate reads the kernel's exact top-k directly: no
+    join back to the vectors and no ranking window."""
     from fts_errors_clustering_spark.operators.pairwise import \
         topk_candidate_pairs
 
     emb = spark.createDataFrame(
         [(i, [float(i), float(i % 3)]) for i in range(12)],
         "doc_id long, embedding array<double>")
-    cand = topk_candidate_pairs(emb, "doc_id", "embedding", 3)
-    a = emb.select(F.col("doc_id").alias("i"), F.col("embedding").alias("va"))
-    b = emb.select(F.col("doc_id").alias("j"), F.col("embedding").alias("vb"))
-    pairs = (cand.join(F.broadcast(a), cand.a == a.i)
-             .join(F.broadcast(b), cand.b == b.j)
-             .select("i", "j", euclidean("va", "vb", 2).alias("dist")))
-    plan = _plan(pairs)
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
+    knn = (topk_candidate_pairs(emb, "doc_id", "embedding", 3)
+           .groupBy("a").agg(F.avg("dist").alias("mean_dist")))
+    plan = _plan(knn)
+    for node in ("BroadcastNestedLoopJoin", "CartesianProduct",
+                 "BroadcastHashJoin", "Window"):
+        assert node not in plan, node
 
 
 def test_contamination_probe_broadcasts_benchmark(spark):
@@ -488,7 +486,7 @@ def test_exchange_budgets(spark):
 #: Spark jobs one warm call submits at sf0.001 (the call and the consumer's
 #: collect, under one job group). Deterministic for a fixed input and plan;
 #: AQE's broadcast and stage threads inherit the group and are counted.
-_FLOW_JOBS = {"pipeline_tfidf_kmeans": 13, "pipeline_word2vec_dbscan": 36}
+_FLOW_JOBS = {"pipeline_tfidf_kmeans": 13, "pipeline_word2vec_dbscan": 33}
 
 
 def test_cluster_flows_reuse_codegen_and_pin_job_counts(spark):

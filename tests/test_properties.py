@@ -240,6 +240,66 @@ def test_bucketed_rank_equals_window_rank(spark, rows):
     assert got == ref
 
 
+def test_bucket_expr_matches_column_form(spark):
+    """``bucket_expr``'s one-string form must hand Catalyst the tree the
+    Column chain built — the same analyzed expression and the same
+    bucket per value — for negative, exponent-form and integral bounds;
+    non-finite bounds must bucket the same."""
+    import re
+
+    from fts_errors_clustering_spark.operators.scale import bucket_expr
+
+    def column_form(col, bounds):
+        return sum((F.when(F.col(col) > F.lit(b), 1).otherwise(0)
+                    for b in sorted(set(bounds))), F.lit(0))
+
+    df = spark.createDataFrame(
+        [(v,) for v in (-3.0, -2.5, -1e-07, 0.0, 1e-05, 0.05, 0.1, 2.0,
+                        3.0, 7.0, 8.5, 1.3e16, float("inf"))], "v double")
+
+    def analyzed(c):
+        plan = df.select(c.alias("b"))._jdf.queryExecution().analyzed()
+        return re.sub(r"#\d+", "", plan.toString())
+
+    def values(c):
+        return [r.b for r in df.select(c.alias("b")).collect()]
+
+    finite = [0.1, -2.5, 1e-05, 3.0, -1e-07, 7, 1e16, 3.0]
+    assert analyzed(bucket_expr("v", finite)) == analyzed(
+        column_form("v", finite))
+    assert values(bucket_expr("v", finite)) == values(
+        column_form("v", finite))
+    assert values(bucket_expr("v", [])) == values(column_form("v", []))
+    inf = [float("-inf"), 0.0, float("inf")]
+    assert values(bucket_expr("v", inf)) == values(column_form("v", inf))
+
+
+def test_prefix_offsets_maps_only_named_measures(spark):
+    """``maps=`` limits the literal offset maps to the named measures; the
+    others are still aggregated into ``rows``, and a named measure's map
+    is the one the default (every measure) builds."""
+    from fts_errors_clustering_spark.operators.scale import \
+        bucket_prefix_offsets_multi
+
+    df = spark.createDataFrame(
+        [(i % 4, float(i)) for i in range(11)], "bucket int, x double")
+
+    def aggs():
+        return dict(cnt=F.count("*"), mx=F.max("x"))
+
+    every = bucket_prefix_offsets_multi(df, **aggs())
+    some = bucket_prefix_offsets_multi(df, maps=("cnt",), **aggs())
+    assert set(every) == {"rows", "cnt", "mx"}
+    assert set(some) == {"rows", "cnt"}
+    assert (sorted(tuple(r) for r in some["rows"])
+            == sorted(tuple(r) for r in every["rows"]))
+    off = [r.o for r in df.select(some["cnt"].alias("o"))
+           .orderBy("bucket", "x").collect()]
+    assert off == [r.o for r in df.select(every["cnt"].alias("o"))
+                   .orderBy("bucket", "x").collect()]
+    assert off == [0] * 3 + [3] * 3 + [6] * 3 + [9] * 2
+
+
 @SET
 @given(st.lists(st.tuples(
     st.integers(min_value=0, max_value=10**6),

@@ -185,28 +185,21 @@ def test_ivfpq_agreement_floor(spark):
     assert len(pq & ex) / len(ex) >= 0.3
 
 
-def test_euclidean_arrow_bit_identical(spark):
-    """euclidean_arrow must equal the HOF fold BITWISE on real pairs —
-    it is used on value-hashed paths (kNN re-rank), so ULP-level equality
-    is the requirement, not approximate equality."""
-    from pyspark.sql import functions as F
-
-    from fts_errors_clustering_spark.functions.vectors import (
-        euclidean,
-        euclidean_arrow,
-    )
-    from fts_errors_clustering_spark.sources.readers import table
-
-    from .conftest import SF_SMALL
+def test_topk_kernel_distances_bit_identical(spark):
+    """The top-k kernel's distances must equal the HOF fold BITWISE on
+    real pairs — they feed value-hashed paths (the kNN means), so
+    ULP-level equality is the requirement, not approximate equality."""
+    from fts_errors_clustering_spark.functions.vectors import euclidean
+    from fts_errors_clustering_spark.operators.pairwise import \
+        topk_candidate_pairs
 
     emb = table(spark, SF_SMALL, "embeddings")
-    a = emb.select(F.col("vec_id").alias("i"), F.col("embedding").alias("ea"))
-    b = emb.select(F.col("vec_id").alias("j"), F.col("embedding").alias("eb"))
-    pairs = (a.join(b, (F.col("i") % 17 == F.col("j") % 17) &
-                    (F.col("i") != F.col("j")))
-             .select(euclidean("ea", "eb", 64).alias("hof"),
-                     euclidean_arrow("ea", "eb").alias("arrow")))
-    bad = pairs.where(F.col("hof") != F.col("arrow")).count()
+    a = emb.select(F.col("vec_id").alias("a"), F.col("embedding").alias("ea"))
+    b = emb.select(F.col("vec_id").alias("b"), F.col("embedding").alias("eb"))
+    pairs = (topk_candidate_pairs(emb, "vec_id", "embedding", 40)
+             .join(a, "a").join(b, "b")
+             .select("dist", euclidean("ea", "eb", 64).alias("hof")))
+    bad = pairs.where(F.col("hof") != F.col("dist")).count()
     n = pairs.count()
     assert n > 10000 and bad == 0
 
