@@ -104,11 +104,11 @@ def _dbscan_driver_tier(spark: SparkSession, emb: DataFrame, id_col: str,
 
     Labeling is identical across regimes and to the distributed plan
     (min core id per component)."""
-    from .pairwise import _CHUNK_BUDGET, _broadcast_matrix
+    from .pairwise import _CHUNK_BUDGET, _broadcast_side
     # .value on a driver-created broadcast is the local object (no fetch);
     # sharing the broadcast handle keeps ONE cache entry serving both this
     # driver kernel and the distributed eps-pair kernel
-    ids, M = _broadcast_matrix(emb, id_col, vec_col).value
+    ids, M = _broadcast_side(emb, id_col, vec_col)[0].value
     n = len(ids)
     if n == 0:
         return spark.createDataFrame([], f"{id_col} long, cluster long")

@@ -418,8 +418,7 @@ def copurchase_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineage per round (``edges`` feeds the degree aggregate AND both semi
     joins), i.e. 3^rounds plan copies, which was measured OOM-ing a
     default-1g-driver session at task-serialization time. k is a 1-row
-    driver materialization (the ``knee_epsilon_value`` discipline), so no
-    per-round scalar subplan either."""
+    driver materialization, so no per-round scalar subplan either."""
     from ..plans.registry import unpersist_any
     li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     # basket-array pair expansion (copurchase_edges): no orderkey self-join.

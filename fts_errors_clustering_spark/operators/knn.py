@@ -16,30 +16,27 @@ matrix, column-sorts the distance matrix and takes per-row means, then runs
   prunes. The 100 TB path swaps the kernel's broadcast candidate
   source for ``BucketedRandomProjectionLSH.approxSimilarityJoin`` (see
   operators/similarity.py).
-- M17 = the Kneedle difference-curve on the sorted means, restated as pure
-  window algebra: normalize x and y to [0,1], knee = argmax(x_hat - y_hat)
-  (the convex-increasing case of Kneedle; the reference's sensitivity sweep
-  and max-of-elbows selection documented as a delta). The curve has one row
-  PER EMBEDDING POINT, so its global position index is built with the
-  two-phase bucket prefix-sum (``operators/scale.quantile_buckets`` +
-  ``bucket_prefix_offsets``) and its global scalars (n, ymin, ymax) with a
-  1-row aggregate broadcast back — no unpartitioned window anywhere: an
-  ``orderBy``-only window is always a SinglePartition exchange, a
-  single-task sort at n = 10^9 points. The sweep's lag/lead neighbours are
-  idx+-1 self-joins (hash shuffle) and its running max is a per-bucket scan
-  + driver prefix-max over <= n_buckets values — the full distributed
-  prefix-scan decomposition.
+- M17 = the Kneedle difference curve on the sorted means: normalize x and
+  y to [0,1], knee = argmax(x_hat - y_hat) (the convex-increasing case of
+  Kneedle), plus the reference's sensitivity sweep and max-of-elbows
+  selection. The curve (one mean per point) is collected once and the
+  knee computed in numpy on the driver, in the oracle SQL's float64
+  operation order. Its size bound is the kNN kernel's broadcast side:
+  the kernel already pulls the whole n x dim embedding matrix to the
+  driver, and the curve is 1/dim of it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+import numpy as np
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.vectors import sql_euclidean
 from ..plans.registry import register
 from ..sources.readers import table
-from .pairwise import topk_candidate_pairs
+from .pairwise import _broadcast_side, topk_candidate_pairs
 
 DIM = 64  # fixture embedding dimension (FIXTURES.md B3)
 
@@ -70,7 +67,9 @@ def knn_mean_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared plan: per-point mean distance to its k=round(sqrt(n)) nearest
     neighbors (the reference's ``kneighbors`` with k=sqrt(n), ``:178``)."""
     emb = table(spark, sf_dir, "embeddings")
-    n = emb.count()
+    # n comes with the kernel's broadcast side, collected once and cached
+    # by plan (the kernel call below hits that cache)
+    n = _broadcast_side(emb, "vec_id", "embedding")[1]
     # half-up, matching the oracle's SQL ROUND (Python round() is
     # banker's; sqrt(int) landing on an exact .5 is ~impossible in
     # binary, but the k derivation should not depend on that argument)
@@ -96,67 +95,41 @@ def knn_mean_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("vec_id", F.round("mean_dist", 6).alias("mean_knn_dist")))
 
 
-def _indexed_curve(knn: DataFrame,
-                   caches: list[DataFrame] | None = None):
-    """The sorted kNN-mean curve with a global 0-based position ``idx`` and
-    the curve scalars (n, ymin, ymax) attached — built WITHOUT a
-    single-partition window: quantile-bucketed rank (scale.py two-phase
-    pattern) for idx, a broadcast 1-row aggregate for the scalars. Keeps
-    the ``bucket`` column so downstream prefix scans can reuse it. The
-    internal kNN cache is appended to ``caches`` so the caller can release
-    it once its bounded output materializes (graph.materialize_release).
+def _sorted_curve(knn: DataFrame, id_col: str = "vec_id") -> np.ndarray:
+    """The kNN-mean curve on the driver, in the oracle's curve order
+    ``(mean_dist, vec_id)``. The curve is one double per point, 1/dim of
+    the embedding matrix the kNN kernel's broadcast side has already
+    pulled to the driver, so that broadcast side is the size bound."""
+    rows = knn.select(id_col, "mean_dist").collect()
+    ids = np.array([r[0] for r in rows], dtype=np.int64)
+    y = np.array([r[1] for r in rows], dtype=np.float64)
+    return y[np.lexsort((ids, y))]
 
-    Returns ``(curve, meta)`` where meta carries the raw per-bucket rows
-    of the offsets collect (bucket, cnt, mn, mx), the derived offsets map,
-    and the folded scalars — so consumers needing per-bucket boundary
-    facts (the sweep's cross-bucket lag/lead values) derive them from THIS
-    collect instead of running their own (guide §2.4)."""
-    from .scale import bucket_prefix_offsets_multi, quantile_buckets
-    # cache BEFORE the quantile pass: approxQuantile is an action, and the
-    # upstream kNN kernel must not run once for the split points and again
-    # for the offsets/window
-    knn = knn.select("vec_id", "mean_dist").cache()
-    if caches is not None:
-        caches.append(knn)
-    bucketed = quantile_buckets(knn, "mean_dist")
-    # ONE <=n_buckets-row collect yields the rank offsets AND the curve
-    # scalars (n = sum of bucket counts, ymin/ymax = min/max of bucket
-    # extrema — the identical doubles): the separate 1-row scalar
-    # aggregate branch + crossJoin this replaces re-scanned the cached
-    # curve once per consumer (guide §2.4 — same-keyed work shares one
-    # pass; measured as one fewer exchange + one fewer stage in every
-    # curve consumer)
-    offm = bucket_prefix_offsets_multi(
-        bucketed, maps=("cnt",), cnt=F.count("*"),
-        mn=F.min("mean_dist"), mx=F.max("mean_dist"))
-    rows = offm["rows"]
-    n = sum(r["cnt"] for r in rows)
-    ymin = min((r["mn"] for r in rows), default=None)
-    ymax = max((r["mx"] for r in rows), default=None)
-    offsets, acc = {}, 0
-    for r in sorted(rows, key=lambda r: r["bucket"]):
-        offsets[r["bucket"]] = acc
-        acc += r["cnt"]
-    meta = {"rows": rows, "offsets": offsets,
-            "n": n, "ymin": ymin, "ymax": ymax}
-    wb = Window.partitionBy("bucket").orderBy("mean_dist", "vec_id")
-    curve = (bucketed
-             .withColumn("idx", (offm["cnt"] + F.row_number().over(wb) - 1)
-                         .cast("long"))
-             .withColumn("n", F.lit(n).cast("long"))
-             .withColumn("ymin", F.lit(ymin).cast("double"))
-             .withColumn("ymax", F.lit(ymax).cast("double")))
-    return curve, meta
+
+def _diff_curve(y: np.ndarray) -> np.ndarray:
+    """Kneedle's difference curve ``d = idx/(n-1) - (y-ymin)/(ymax-ymin)``
+    over the sorted curve ``y``, in float64: the same IEEE operation
+    sequence as the oracle's SQL. Where the SQL divides by zero (n = 1,
+    or a flat curve) every d is NaN, as every SQL d is null."""
+    ymin, ymax = y[:1], y[-1:]  # empty on an empty curve
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return (np.arange(len(y), dtype=np.float64) / np.float64(len(y) - 1)
+                - (y - ymin) / (ymax - ymin))
+
+
+def _first_max(d: np.ndarray) -> np.ndarray:
+    """``ORDER BY d DESC, idx LIMIT 1`` as an index array of length 0 or 1:
+    a stable sort of -d, in which NaN (the SQL's null) sorts last."""
+    return np.argsort(-d, kind="stable")[:1]
 
 
 def knee_epsilon_value(knn: DataFrame, id_col: str = "vec_id") -> float:
-    """Distributed Kneedle knee -> epsilon as a Python scalar: the
-    ``knn_knee_epsilon`` plan (bucket-prefix-sum global index, broadcast
-    1-row scalars, argmax via TakeOrderedAndProject) reduced to ONE driver
-    row — the per-point curve is never collected, so the driver
-    materialization is O(1) at any corpus size (vs the O(n) ``collect()``
-    of the curve the reference does at ``word2vec_dbscan_approach.ipynb:
-    191-198``, which at 10^9 points is a multi-GB driver pull).
+    """Kneedle knee -> epsilon as a Python scalar: the ``knn_knee_epsilon``
+    argmax (the first maximum of d in curve order, as ``ORDER BY d DESC,
+    idx``) over the curve collected once to the driver, as the reference
+    does at ``word2vec_dbscan_approach.ipynb:191-198``. Guarded where the
+    registered query is not: n = 1 divides by 1, and a flat curve
+    (ymax == ymin) contributes 0, so its knee is the last point.
 
     Degenerate-corpus note (the reference author hit this and hand-set
     eps=20, SURVEY.md 2.9.3): when the kNN-mean curve is near-flat or
@@ -165,21 +138,20 @@ def knee_epsilon_value(knn: DataFrame, id_col: str = "vec_id") -> float:
     deterministic, reference-faithful value — callers that observe a
     degenerate clustering should pass eps explicitly, exactly as the
     reference did."""
-    caches: list[DataFrame] = []
-    curve, _meta = _indexed_curve(
-        knn.select(F.col(id_col).alias("vec_id"), "mean_dist"), caches)
-    span = F.col("ymax") - F.col("ymin")
-    diffs = curve.select(
-        "idx", "mean_dist",
-        ((F.col("idx").cast("double") / F.greatest(F.col("n") - 1, F.lit(1)))
-         - F.when(span > 0, (F.col("mean_dist") - F.col("ymin")) / span)
-            .otherwise(F.lit(0.0))).alias("d"))
-    try:
-        row = diffs.orderBy(F.desc("d"), F.asc("idx")).limit(1).first()
-    finally:
-        for c in caches:
-            c.unpersist()
-    return float(row.mean_dist)
+    y = _sorted_curve(knn, id_col)
+    d = np.arange(len(y), dtype=np.float64) / np.float64(max(len(y) - 1, 1))
+    span = y[-1] - y[0]
+    if span > 0:
+        d -= (y - y[0]) / span
+    return float(y[np.argmax(d)])
+
+
+def _local_frame(spark: SparkSession, **cols) -> DataFrame:
+    """Driver columns as a ``LocalRelation`` frame: built through Arrow, so
+    it runs no job and starts no Python worker. NaN becomes null (the
+    SQL's division by zero)."""
+    return spark.createDataFrame(pa.table({
+        k: pa.array(v, mask=np.isnan(v)) for k, v in cols.items()}))
 
 
 @register(
@@ -213,20 +185,12 @@ def knn_knee_epsilon(spark: SparkSession, sf_dir: str) -> DataFrame:
     run rejected its computed eps=7.55 and hand-set 20 (SURVEY.md 2.9.3);
     we keep the op deterministic and test eps-monotonicity instead.
     ``knn_knee_sweep`` below is the full sensitivity sweep."""
-    from .graph import materialize_release
-    knn = knn_mean_distances(spark, sf_dir)
-    caches: list[DataFrame] = []
-    curve, _meta = _indexed_curve(knn, caches)
-    diffs = curve.select(
-        "idx", "mean_dist",
-        ((F.col("idx").cast("double") / (F.col("n") - 1)) -
-         ((F.col("mean_dist") - F.col("ymin")) / (F.col("ymax") - F.col("ymin"))))
-        .alias("d"))
-    out = (diffs.orderBy(F.desc("d"), F.asc("idx")).limit(1)
-           .select(F.col("idx").cast("long").alias("knee_idx"),
-                   F.round("mean_dist", 6).alias("epsilon"),
-                   F.round("d", 6).alias("max_diff")))
-    return materialize_release(out, caches)
+    y = _sorted_curve(knn_mean_distances(spark, sf_dir))
+    d = _diff_curve(y)
+    i = _first_max(d)
+    return (_local_frame(spark, knee_idx=i, mean_dist=y[i], d=d[i])
+            .select("knee_idx", F.round("mean_dist", 6).alias("epsilon"),
+                    F.round("d", 6).alias("max_diff")))
 
 
 # --- M17 full sensitivity sweep ---------------------------------------------
@@ -304,7 +268,14 @@ _SWEEP_TAIL_SQL = f"""
     tags=("knn", "vectors", "window"),
 )
 def knn_knee_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """M17 PROPER: the reference's sensitivity sweep, as window algebra.
+    """M17 PROPER: the reference's sensitivity sweep (``knee_sweep``) over
+    the embeddings' kNN-mean curve. One row per S."""
+    return knee_sweep(knn_mean_distances(spark, sf_dir))
+
+
+def knee_sweep(knn: DataFrame) -> DataFrame:
+    """The sensitivity sweep over a ``(vec_id, mean_dist)`` curve, on the
+    driver: a numpy port of ``_SWEEP_TAIL_SQL``.
 
     Kneedle with sensitivity S on the convex-increasing difference curve d:
     a knee fires at the first local maximum of d whose curve later dips
@@ -313,132 +284,28 @@ def knn_knee_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``chosen_epsilon`` = max over all elbows — the reference's selection
     rule (``word2vec_dbscan_approach.ipynb:191-221``). One row per S.
     """
-    from .graph import materialize_release
-    knn = knn_mean_distances(spark, sf_dir)
-    caches: list[DataFrame] = []
-    curve, meta = _indexed_curve(knn, caches)
-    diffs = curve.select(
-        "bucket", "idx", "n", "mean_dist",
-        ((F.col("idx").cast("double") / (F.col("n") - 1)) -
-         ((F.col("mean_dist") - F.col("ymin")) /
-          (F.col("ymax") - F.col("ymin")))).alias("d")).cache()
-    caches.append(diffs)
-
-    # lag/lead over the global idx order WITHOUT a single-partition window
-    # and WITHOUT the former idx+-1 equi-self-joins (two hash shuffles of
-    # the whole curve): idx is dense and bucket-contiguous, so in-bucket
-    # neighbours come from a window on the bucketing the cached diffs
-    # already carry (no new exchange), and the one cross-bucket neighbour
-    # each bucket boundary needs — last/first d of the adjacent bucket —
-    # is DERIVED from _indexed_curve's own offsets collect (r11, guide
-    # §2.4): the bucket's first row (by idx) carries its min mean_dist at
-    # idx = offset, its last row the max at idx = offset + cnt - 1, so
-    # fd/ld are driver float algebra over the already-collected
-    # (cnt, mn, mx) rows — the same IEEE op sequence as the d column
-    # (np.float64 division mirrors the JVM double bit-for-bit), replacing
-    # the separate per-bucket min_by/max_by collect the sweep used to run.
-    import numpy as np
-    neg = F.lit(-1e18)
-    n_f = np.float64(meta["n"])
-    ymin_f = np.float64(meta["ymin"] if meta["ymin"] is not None else np.nan)
-    ymax_f = np.float64(meta["ymax"] if meta["ymax"] is not None else np.nan)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        span = ymax_f - ymin_f
-        bounds = []
-        for r in sorted(meta["rows"], key=lambda r: r["bucket"]):
-            off = meta["offsets"][r["bucket"]]
-            fd = float(np.float64(off) / (n_f - 1.0)
-                       - (np.float64(r["mn"]) - ymin_f) / span)
-            ld = float(np.float64(off + r["cnt"] - 1) / (n_f - 1.0)
-                       - (np.float64(r["mx"]) - ymin_f) / span)
-            bounds.append((r["bucket"], fd, ld))
-    prev_map, next_map = {}, {}
-    for i, (b, fd, ld) in enumerate(bounds):
-        if i > 0:
-            prev_map[b] = bounds[i - 1][2]  # predecessor bucket's last d
-        if i + 1 < len(bounds):
-            next_map[b] = bounds[i + 1][1]  # successor bucket's first d
-
-    def _lit_map(m):
-        if not m:
-            return F.lit(None).cast("double")
-        return F.element_at(
-            F.create_map(*[F.lit(x) for kv in m.items() for x in kv]),
-            F.col("bucket"))
-
-    wlag = Window.partitionBy("bucket").orderBy("idx")
-    marked = (diffs
-              .withColumn("d_prev",
-                          F.coalesce(F.lag("d").over(wlag),
-                                     _lit_map(prev_map)))
-              .withColumn("d_next",
-                          F.coalesce(F.lead("d").over(wlag),
-                                     _lit_map(next_map)))
-              .withColumn(
-                  "is_lmx",
-                  ((F.col("d") > F.coalesce(F.col("d_prev"), neg)) &
-                   (F.col("d") >= F.coalesce(F.col("d_next"), neg)))
-                  .cast("int"))
-              .drop("d_prev", "d_next")
-              .cache())
-    caches.append(marked)
-
-    # running max of the last local-max idx, decomposed as a distributed
-    # prefix scan: per-bucket maxima (<= n_buckets rows to the driver)
-    # exclusive-prefix-maxed into per-bucket carry-ins, then a WITHIN-bucket
-    # running max coalesced with the carry-in — exact global scan, shuffle
-    # on the bucket id only
-    per_bucket = sorted(
-        (r["bucket"], r["m"]) for r in
-        marked.groupBy("bucket")
-              .agg(F.max(F.when(F.col("is_lmx") == 1, F.col("idx")))
-                   .alias("m")).collect())
-    carry, run = {}, None
-    for b, m in per_bucket:
-        if run is not None:
-            carry[b] = run
-        if m is not None:
-            run = m if run is None else max(run, m)
-    carry_expr = (F.element_at(
-        F.create_map(*[F.lit(x) for kv in carry.items() for x in kv]),
-        F.col("bucket")) if carry else F.lit(None).cast("long"))
-    wrun = (Window.partitionBy("bucket").orderBy("idx")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    grouped = marked.withColumn(
-        "grp",
-        F.coalesce(
-            F.max(F.when(F.col("is_lmx") == 1, F.col("idx"))).over(wrun),
-            carry_expr))
-    lmx = (grouped.where(F.col("grp").isNotNull())
-           .groupBy("grp")
-           .agg(F.max(F.when(F.col("idx") == F.col("grp"), F.col("d")))
-                 .alias("dl"),
-                F.max(F.when(F.col("idx") == F.col("grp"), F.col("mean_dist")))
-                 .alias("eps_l"),
-                F.min(F.when(F.col("idx") > F.col("grp"), F.col("d")))
-                 .alias("min_after"),
-                F.max("n").alias("n")))
-
-    sens = spark.createDataFrame([(int(s),) for s in SENSITIVITIES], "s long")
-    hits = (sens.crossJoin(lmx)
-            .where(F.col("min_after") <
-                   F.col("dl") - F.col("s").cast("double") / (F.col("n") - 1))
-            .groupBy("s").agg(F.min("grp").alias("knee_idx")))
-    fallback = (diffs.orderBy(F.desc("d"), F.asc("idx")).limit(1)
-                .select(F.col("idx").alias("fidx"),
-                        F.col("mean_dist").alias("feps")))
-    per_s = (sens.join(hits, "s", "left")
-             .join(lmx.select(F.col("grp").alias("knee_idx"), "eps_l"),
-                   "knee_idx", "left")
-             .crossJoin(F.broadcast(fallback))
-             .select(F.col("s").alias("sensitivity"),
-                     F.coalesce("knee_idx", "fidx").cast("long")
-                      .alias("knee_idx"),
-                     F.coalesce("eps_l", "feps").alias("eps")))
-    out = per_s.select(
-        "sensitivity", "knee_idx", F.round("eps", 6).alias("epsilon"),
-        F.round(F.max("eps").over(Window.partitionBy()), 6)
-         .alias("chosen_epsilon"))
-    # bounded output (one row per sensitivity) — materialize while the
-    # curve/diff/marked caches are hot, then release all three
-    return materialize_release(out, caches)
+    y = _sorted_curve(knn)
+    d = _diff_curve(y)
+    lo = np.float64(-1e18)  # the SQL's COALESCE for the missing neighbour
+    lmx = np.flatnonzero((d > np.append(lo, d[:-1]))
+                         & (d >= np.append(d[1:], lo)))
+    # a local max's group runs up to the next one; min_after is the least
+    # d after the local max within its group (NaN when there is none)
+    ends = np.append(lmx[1:], len(d))
+    min_after = np.array([d[g + 1:e].min() if e > g + 1 else np.nan
+                          for g, e in zip(lmx, ends)])
+    # per S the first local max that fires, else the argmax fallback; the
+    # SQL cross-joins the 1-row fallback, so an empty curve has no rows
+    fallback = _first_max(d)
+    sens = np.array(SENSITIVITIES if fallback.size else [], dtype=np.int64)
+    knees = np.array(
+        [np.append(lmx[min_after < d[lmx]
+                       - np.float64(s) / np.float64(len(d) - 1)],
+                   fallback)[0] for s in sens], dtype=np.int64)
+    eps = y[knees]
+    return (_local_frame(knn.sparkSession, sensitivity=sens,
+                         knee_idx=knees, eps=eps,
+                         chosen=np.full(len(eps), eps.max(initial=-np.inf)))
+            .select("sensitivity", "knee_idx",
+                    F.round("eps", 6).alias("epsilon"),
+                    F.round("chosen", 6).alias("chosen_epsilon")))

@@ -97,11 +97,6 @@ def _broadcast_side(emb: DataFrame, id_col: str, vec_col: str):
     return entry
 
 
-def _broadcast_matrix(emb: DataFrame, id_col: str, vec_col: str):
-    """The live Broadcast handle of ``_broadcast_side``."""
-    return _broadcast_side(emb, id_col, vec_col)[0]
-
-
 #: pairs per streaming-side task. Measured on a 4-core host (local[4],
 #: one BLAS thread per worker): the kernel's numpy work is ~0.025 CPU-s at
 #: 1,000 x 32 embeddings (10^6 pairs) and ~0.5 CPU-s at 2^24 pairs, while

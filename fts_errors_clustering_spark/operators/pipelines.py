@@ -104,11 +104,12 @@ def pipeline_word2vec_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = max(2, int(round(n ** 0.5)))
     knn = (topk_candidate_pairs(emb, "doc_id", "embedding", k)
            .groupBy("a").agg(F.avg("dist").alias("mean_dist")))
-    # distributed knee (knn.py plan): only the 1-row argmax reaches the
-    # driver — never the per-point curve (at 10^9 embeddings a curve
-    # collect() is a multi-GB driver pull). If the knee lands degenerate on
-    # a given corpus (one giant cluster — the reference hit this and
-    # hand-set eps=20), pass eps to dbscan_labels explicitly.
+    # the knee (knn.py) collects the per-point curve once and runs on the
+    # driver: one double per doc, 1/32 of the embedding matrix the
+    # kernel's broadcast side already collected, so that side is the size
+    # bound. If the knee lands degenerate on a given corpus (one giant
+    # cluster — the reference hit this and hand-set eps=20), pass eps to
+    # dbscan_labels explicitly.
     from .knn import knee_epsilon_value
     eps = knee_epsilon_value(knn, id_col="a")
 

@@ -268,22 +268,19 @@ def bucket_prefix_offsets(bucketed: DataFrame, agg) -> "F.Column":
     return bucket_prefix_offsets_multi(bucketed, v=agg)["v"]
 
 
-def bucket_prefix_offsets_multi(bucketed: DataFrame, maps=None,
-                                **aggs) -> dict:
+def bucket_prefix_offsets_multi(bucketed: DataFrame, **aggs) -> dict:
     """``bucket_prefix_offsets`` for SEVERAL prefix measures in ONE driver
     round-trip: one ≤ n_buckets-row aggregate computes every ``agg`` at
-    once, and each keyword named in ``maps`` (default: every keyword)
-    gets its own literal-map offset column keyed on ``bucket``. Used when
-    a composition needs multiple exact global prefix sums over the same
-    bucketing (e.g. the survival curves' two at-risk processes) — N offset
-    maps for the price of one tiny job. A measure left out of ``maps``
-    (the kNN curve's min/max) is only aggregated: it costs no literal map."""
+    once, and each keyword gets its own literal-map offset column keyed on
+    ``bucket``. Used when a composition needs multiple exact global prefix
+    sums over the same bucketing (e.g. the survival curves' two at-risk
+    processes) — N offset maps for the price of one tiny job."""
     rows = bucketed.groupBy("bucket").agg(
         *[a.alias(k) for k, a in aggs.items()]).collect()
     out = {"rows": rows}  # raw per-bucket rows, for callers that fold
     # additional whole-table scalars (sum/min/max of the bucket aggs) out
     # of the same collect instead of running a second aggregate branch
-    for k in (aggs if maps is None else maps):
+    for k in aggs:
         totals = {r["bucket"]: r[k] for r in rows}
         offsets, acc = {}, 0
         for b in sorted(totals):

@@ -1357,7 +1357,7 @@ def user_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     one timestamp of state per step)."""
     ev = table(spark, sf_dir, "events")
     v, c, p = funnel_min_times(ev, FUNNEL_STEPS)
-    # one 1-row materialization (the knee_epsilon_value discipline): a
+    # one 1-row materialization: a
     # 3-branch union of selects over the counts frame would replicate the
     # whole funnel subtree per branch (measured 74 Exchange nodes); the
     # counts are O(1), so collect once and emit the bounded 3-row table

@@ -82,8 +82,8 @@ QUERIES = [
     "heavy_hitter_tokens",         # documents: MG sketches + certified recount
     "bpe_merge_table",             # documents: vocab-table merge rounds
     "bpe_tokens_per_lang",         # documents: encode-side token budget
-    "knn_knee_epsilon",            # embeddings: bucketed curve rank + knee
-    "knn_knee_sweep",              # embeddings: distributed prefix scan
+    "knn_knee_epsilon",            # embeddings: kNN kernel + driver knee
+    "knn_knee_sweep",              # embeddings: kNN kernel + driver sweep
     "split_leakage_counts",        # documents: digest x split-pair join
     "leakage_safe_splits",         # documents: CC-rep keyed split re-hash
     "incremental_neardup_counts",  # documents: batch-vs-history LSH gate

@@ -3,6 +3,8 @@ S5/S6 listing utilities."""
 
 from __future__ import annotations
 
+import pytest
+
 from fts_errors_clustering_spark.operators.pipelines import (
     list_catalog_tables, list_files, pipeline_tfidf_kmeans,
     pipeline_word2vec_dbscan)
@@ -52,11 +54,15 @@ def test_word2vec_dbscan_fuzz_stage_spread(spark, monkeypatch):
             sc.setLocalProperty("spark.job.description", None)
         release_consumer_caches()
         # the fuzz stage is the collect's CPU-heaviest stage (the
-        # levenshtein over every doc); the status store has its task count
+        # levenshtein over every doc); the status store has its task count.
+        # A store at its retainedStages cap evicts skipped stages first,
+        # so a job can list a stage the store no longer holds; such a
+        # stage ran no task and is passed over
         st, store = sc.statusTracker(), sc._jsc.sc().statusStore()
         stages = [store.lastStageAttempt(sid)
                   for jid in st.getJobIdsForGroup(group)
-                  for sid in st.getJobInfo(jid).stageIds]
+                  for sid in st.getJobInfo(jid).stageIds
+                  if st.getStageInfo(sid) is not None]
         fuzz = max(stages, key=lambda d: d.executorCpuTime())
         return _canon(df.columns, rows), fuzz.numCompleteTasks()
 
@@ -77,9 +83,9 @@ def test_word2vec_dbscan_fuzz_stage_spread(spark, monkeypatch):
 
 
 def test_knee_epsilon_matches_collect_form(spark):
-    """The distributed knee (bucket prefix-sum index + 1-row argmax) must
-    produce the SAME epsilon as the driver-side sorted-curve form it
-    replaced in pipeline B (VERDICT r03 'What's wrong' #1)."""
+    """``knee_epsilon_value`` must give the epsilon of the plain Python
+    argmax over the sorted curve (the reference's collect form,
+    ``word2vec_dbscan_approach.ipynb:191-198``) on the sf0.001 kNN means."""
     from fts_errors_clustering_spark.operators.knn import (
         knee_epsilon_value, knn_mean_distances)
     knn = knn_mean_distances(spark, SF_SMALL).cache()
@@ -91,13 +97,55 @@ def test_knee_epsilon_matches_collect_form(spark):
     assert eps == curve[knee]
 
 
-def test_knee_epsilon_flat_curve(spark):
-    """Degenerate flat curve (ymax == ymin): no division blow-up; the knee
-    epsilon is the constant value itself."""
+@pytest.mark.parametrize("curve, eps", [
+    ([(i, 2.5) for i in range(10)], 2.5),
+    ([(7, 1.0), (3, 4.0)], 1.0),
+    ([(5, 1.0), (2, 1.0), (9, 1.0), (1, 3.0), (4, 3.5), (0, 5.0)], 1.0),
+    ([(8, 9.0), (1, 0.5), (6, 2.0), (3, 1.0), (0, 8.5), (2, 1.5), (7, 3.0)],
+     3.0),
+], ids=["flat", "two_points", "tied", "unordered"])
+def test_knee_epsilon_flat_curve(spark, curve, eps):
+    """Small and degenerate curves: a flat curve (ymax == ymin) divides by
+    nothing and its knee is the constant value itself; a 2-point curve, a
+    curve whose tied means are ordered by id, and rows not in curve order
+    give the epsilon the distributed knee this replaced gave."""
     from fts_errors_clustering_spark.operators.knn import knee_epsilon_value
-    knn = spark.createDataFrame(
-        [(i, 2.5) for i in range(10)], "vec_id long, mean_dist double")
-    assert knee_epsilon_value(knn) == 2.5
+    knn = spark.createDataFrame(curve, "vec_id long, mean_dist double")
+    assert knee_epsilon_value(knn) == eps
+
+
+def test_knee_sweep_matches_sql_on_multi_knee_curve(spark):
+    """The driver sweep must equal the committed sweep SQL (the oracle's
+    curve and difference CTEs, then ``_SWEEP_TAIL_SQL``) run by DuckDB over
+    the same curve, on a curve where S picks three different knees: the
+    local max at idx 3 (S = 1), the one at idx 10 (S = 3, 5) and the
+    argmax fallback (S >= 10). Rows arrive out of curve order, and the
+    tied means at idx 11-12 are ordered by id."""
+    import duckdb
+    import numpy as np
+    import pandas as pd
+
+    from fts_errors_clustering_spark.cli import _canon
+    from fts_errors_clustering_spark.operators.knn import _KNN_CTE, knee_sweep
+    from fts_errors_clustering_spark.plans.registry import all_queries
+
+    steps = [0.1] * 3 + [1.5] + [0.1] * 6 + [4.0, 0.0] + [0.1] * 11 + [6.0]
+    y = 1.0 + np.concatenate(([0.0], np.cumsum(steps)))
+    ids = np.random.default_rng(7).permutation(len(y))
+    curve = pd.DataFrame({"vec_id": ids, "mean_dist": y}).sample(
+        frac=1.0, random_state=3)
+    got = knee_sweep(spark.createDataFrame(curve))
+    oracle = all_queries()["knn_knee_sweep"].oracle
+    sql = oracle.replace(f"{_KNN_CTE},", "")
+    assert sql != oracle
+    con = duckdb.connect()
+    con.register("knn", curve)
+    res = con.execute(sql)
+    want = _canon([c[0] for c in res.description], res.fetchall())
+    con.close()
+    assert _canon(got.columns, got.collect()) == want
+    knees = {r.sensitivity: r.knee_idx for r in got.collect()}
+    assert (knees[1], knees[3], knees[5], knees[10]) == (3, 10, 10, 23)
 
 
 def test_list_files_and_catalog(spark):

@@ -182,40 +182,6 @@ def test_curriculum_phases_no_single_partition_window(spark):
     assert "bucket" in plan
 
 
-def test_knee_curve_no_single_partition_window(spark):
-    """M17's curve index/lag-lead/running-max must all avoid unpartitioned
-    windows: one row per embedding point means a global window is a
-    single-task sort at scale. A SinglePartition exchange under a 1-row
-    scalar AGGREGATE is legitimate (32 partial rows -> 1); a Window node
-    whose child subtree (parents print before children in the tree string)
-    starts with Exchange SinglePartition is the scale-killer and banned."""
-    import re
-
-    from pyspark.sql import functions as F
-
-    from fts_errors_clustering_spark.operators.knn import (_indexed_curve,
-                                                           knn_mean_distances)
-
-    # the REGISTERED queries return bounded local relations post-release
-    # (materialize_release), so lint the lazy curve plan they build from
-    knn = knn_mean_distances(spark, SF_SMALL)
-    caches = []
-    curve, _meta = _indexed_curve(knn, caches)
-    diffs = curve.select(
-        "idx", "mean_dist",
-        ((F.col("idx").cast("double") / (F.col("n") - 1)) -
-         ((F.col("mean_dist") - F.col("ymin")) /
-          (F.col("ymax") - F.col("ymin")))).alias("d"))
-    plan = _plan(diffs.orderBy(F.desc("d"), F.asc("idx")).limit(1))
-    for c in caches:
-        c.unpersist()
-    bad = re.findall(
-        r"Window[^\n]*\n(?:[^\n]*(?:Sort|Project|Filter)[^\n]*\n){0,3}"
-        r"[^\n]*Exchange SinglePartition", plan)
-    assert not bad, f"knee curve: window over SinglePartition\n{plan}"
-    assert "Window" in plan  # the within-bucket scans are still windows
-
-
 def test_survival_curves_no_single_partition_window(spark):
     """The survival family's at-risk/cumulative prefix processes must use
     the two-phase bucket composition, never an unpartitioned
@@ -224,7 +190,7 @@ def test_survival_curves_no_single_partition_window(spark):
     and a global window is a one-task sort (the r09 verdict finding).
     SinglePartition under the 1-row scalar aggregates (censor time, arm
     totals) is legitimate; a Window fed by an Exchange SinglePartition is
-    banned (the knee-curve regex precedent)."""
+    banned."""
     import re
     for name in ("nelson_aalen_hazard", "ab_test_logrank"):
         plan = _plan(_DEFS[name].fn(spark, SF_SMALL))
@@ -243,15 +209,15 @@ def test_kernel_broadcast_cache_bounded(spark):
     from fts_errors_clustering_spark.operators import pairwise
     from fts_errors_clustering_spark.sources.readers import table
     emb = table(spark, SF_SMALL, "embeddings")
-    b1 = pairwise._broadcast_matrix(emb, "vec_id", "embedding")
-    b2 = pairwise._broadcast_matrix(emb, "vec_id", "embedding")
+    b1 = pairwise._broadcast_side(emb, "vec_id", "embedding")[0]
+    b2 = pairwise._broadcast_side(emb, "vec_id", "embedding")[0]
     assert b1 is b2, "identical plans must share one broadcast"
     for i in range(2 * pairwise._CACHE_MAX):
         # distinct limits -> distinct semantic hashes -> distinct entries
-        pairwise._broadcast_matrix(emb.limit(10 + i), "vec_id", "embedding")
+        pairwise._broadcast_side(emb.limit(10 + i), "vec_id", "embedding")
     assert len(pairwise._MATRIX_CACHE) <= pairwise._CACHE_MAX
     # the original entry was evicted; its slot refilled fresh on re-request
-    b3 = pairwise._broadcast_matrix(emb, "vec_id", "embedding")
+    b3 = pairwise._broadcast_side(emb, "vec_id", "embedding")[0]
     assert len(pairwise._MATRIX_CACHE) <= pairwise._CACHE_MAX
     assert (b3.value[0] == b1.value[0]).all()
 
@@ -297,8 +263,6 @@ _BNLJ_OK: set[str] = {
     "ann_batch_topk",            # literal query batch
     "embedding_near_dup_pairs",  # scalar norm/total row
     "top_users_share",           # scalar grand total
-    "knn_knee_sweep",            # 7-literal-row smoothing values
-    "knn_knee_epsilon",          # 1-row curve scalars (n, ymin, ymax)
     "bigram_logprob_scores",     # scalar vocabulary size
     "mixture_weights",           # scalar corpus totals
     "token_budget_selection",    # scalar budget cutoff
@@ -342,9 +306,6 @@ _BNLJ_OK: set[str] = {
     "dow_seasonality_index",     # 1-row grand-total broadcast
 }
 
-#: CartesianProduct allowed only against a literal parameter table
-_CART_OK: set[str] = {"knn_knee_sweep"}  # curve x 7 literal S values
-
 
 def test_plan_lint_no_cartesian_or_unbounded_nested_loop(spark):
     """Repo-wide plan lint: NO registered batch query may plan a
@@ -359,7 +320,7 @@ def test_plan_lint_no_cartesian_or_unbounded_nested_loop(spark):
         if skip_tags & set(qd.tags):
             continue
         plan = _plan(qd.fn(spark, SF_SMALL))
-        if name not in _CART_OK and "CartesianProduct" in plan:
+        if "CartesianProduct" in plan:
             failures.append(f"{name}: CartesianProduct")
         if name not in _BNLJ_OK and "BroadcastNestedLoopJoin" in plan:
             failures.append(f"{name}: BroadcastNestedLoopJoin")
@@ -486,7 +447,7 @@ def test_exchange_budgets(spark):
 #: Spark jobs one warm call submits at sf0.001 (the call and the consumer's
 #: collect, under one job group). Deterministic for a fixed input and plan;
 #: AQE's broadcast and stage threads inherit the group and are counted.
-_FLOW_JOBS = {"pipeline_tfidf_kmeans": 13, "pipeline_word2vec_dbscan": 33}
+_FLOW_JOBS = {"pipeline_tfidf_kmeans": 13, "pipeline_word2vec_dbscan": 27}
 
 
 def test_cluster_flows_reuse_codegen_and_pin_job_counts(spark):

@@ -223,7 +223,7 @@ def test_bucketed_rank_equals_window_rank(spark, rows):
     bucket_prefix_offsets + within-bucket row_number) must equal the
     single-partition ROW_NUMBER definition on ARBITRARY value
     distributions — duplicates, constants, and skew included. This is the
-    helper packed_sequences and the M17 knee curve stand on."""
+    helper packed_sequences stands on."""
     from pyspark.sql import Window
     from fts_errors_clustering_spark.operators.scale import (
         bucket_prefix_offsets, quantile_buckets)
@@ -272,32 +272,6 @@ def test_bucket_expr_matches_column_form(spark):
     assert values(bucket_expr("v", [])) == values(column_form("v", []))
     inf = [float("-inf"), 0.0, float("inf")]
     assert values(bucket_expr("v", inf)) == values(column_form("v", inf))
-
-
-def test_prefix_offsets_maps_only_named_measures(spark):
-    """``maps=`` limits the literal offset maps to the named measures; the
-    others are still aggregated into ``rows``, and a named measure's map
-    is the one the default (every measure) builds."""
-    from fts_errors_clustering_spark.operators.scale import \
-        bucket_prefix_offsets_multi
-
-    df = spark.createDataFrame(
-        [(i % 4, float(i)) for i in range(11)], "bucket int, x double")
-
-    def aggs():
-        return dict(cnt=F.count("*"), mx=F.max("x"))
-
-    every = bucket_prefix_offsets_multi(df, **aggs())
-    some = bucket_prefix_offsets_multi(df, maps=("cnt",), **aggs())
-    assert set(every) == {"rows", "cnt", "mx"}
-    assert set(some) == {"rows", "cnt"}
-    assert (sorted(tuple(r) for r in some["rows"])
-            == sorted(tuple(r) for r in every["rows"]))
-    off = [r.o for r in df.select(some["cnt"].alias("o"))
-           .orderBy("bucket", "x").collect()]
-    assert off == [r.o for r in df.select(every["cnt"].alias("o"))
-                   .orderBy("bucket", "x").collect()]
-    assert off == [0] * 3 + [3] * 3 + [6] * 3 + [9] * 2
 
 
 @SET
