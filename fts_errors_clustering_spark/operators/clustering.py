@@ -50,56 +50,52 @@ def external_cluster_metrics(assigned: DataFrame, label_col: str,
     rows equals ``select(pred).distinct().count()`` without the separate
     corpus-scan action that count used to cost (guide §5.1).
     """
-    from pyspark.sql import Window
-
-    pts = assigned.select(F.col(label_col).alias("c"), F.col(pred_col).alias("k"))
-    # ONE pass: contingency table, then ai/bj/n as windows over it (tiny
-    # after aggregation) and ALL eight statistics in a single global
-    # aggregate. The entropy sums use the weighted identity
+    # SQL text, one string per column: the plan builds in a few py4j calls
+    # (a Column tree costs one per node) and analyzes to the Column form's
+    # plan (``ln`` is Column ``log``, ``1.0D`` its double literal). ONE
+    # pass: contingency table, then ai/bj/n as windows over it (tiny after
+    # aggregation) and ALL eight statistics in a single global aggregate.
+    # The entropy sums use the weighted identity
     # sum_c (ai/n)ln(ai/n) == sum_{c,k} (nij/n)ln(ai/n) (since sum_k nij =
     # ai), so no per-c/per-k branch plans exist; sa/sb count each group
     # once via a row_number guard. Round 1's form (4 groupBys + 8
     # crossJoin branches) compiled a far larger plan for the same numbers.
-    cont = pts.groupBy("c", "k").agg(F.count("*").alias("nij"))
-    wall, wc, wk = Window.partitionBy(), Window.partitionBy("c"), Window.partitionBy("k")
-    annotated = cont.select(
+    def ent(num: str, den: str) -> str:
+        return (f"-CAST(CAST(sum(CAST((nij / n) * ln({num} / {den}) "
+                f"AS DECIMAL(27,18))) AS STRING) AS DOUBLE)")
+
+    def comb(c: str) -> str:  # 2*C(c,2), exact
+        return f"CAST({c} * ({c} - 1) AS BIGINT)"
+
+    cont = (assigned.selectExpr(f"`{label_col}` AS c", f"`{pred_col}` AS k")
+            .groupBy("c", "k").agg(F.expr("count(*) AS nij")))
+    annotated = cont.selectExpr(
         "c", "k", "nij",
-        F.sum("nij").over(wall).alias("n"),
-        F.sum("nij").over(wc).alias("ai"),
-        F.sum("nij").over(wk).alias("bj"),
-        F.row_number().over(wc.orderBy("k")).alias("rn_c"),
-        F.row_number().over(wk.orderBy("c")).alias("rn_k"))
+        "sum(nij) OVER () AS n",
+        "sum(nij) OVER (PARTITION BY c) AS ai",
+        "sum(nij) OVER (PARTITION BY k) AS bj",
+        "row_number() OVER (PARTITION BY c ORDER BY k) AS rn_c",
+        "row_number() OVER (PARTITION BY k ORDER BY c) AS rn_k")
+    row = annotated.selectExpr(
+        f"{ent('ai', 'n')} AS hc", f"{ent('bj', 'n')} AS hk",
+        f"{ent('nij', 'bj')} AS hck", f"{ent('nij', 'ai')} AS hkc",
+        f"sum({comb('nij')}) AS sij",
+        f"sum(CASE WHEN rn_c = 1 THEN {comb('ai')} END) AS sa",
+        f"sum(CASE WHEN rn_k = 1 THEN {comb('bj')} END) AS sb",
+        f"{comb('max(n)')} AS sn",
+        "sum(CASE WHEN rn_k = 1 THEN 1 ELSE 0 END) AS nk")
 
-    comb = lambda c: (c * (c - F.lit(1))).cast("long")  # 2*C(c,2), exact
-    row = annotated.agg(
-        (-_dec_term_sum((F.col("nij") / F.col("n")) *
-                        F.log(F.col("ai") / F.col("n")))).alias("hc"),
-        (-_dec_term_sum((F.col("nij") / F.col("n")) *
-                        F.log(F.col("bj") / F.col("n")))).alias("hk"),
-        (-_dec_term_sum((F.col("nij") / F.col("n")) *
-                        F.log(F.col("nij") / F.col("bj")))).alias("hck"),
-        (-_dec_term_sum((F.col("nij") / F.col("n")) *
-                        F.log(F.col("nij") / F.col("ai")))).alias("hkc"),
-        F.sum(comb(F.col("nij"))).alias("sij"),
-        F.sum(F.when(F.col("rn_c") == 1, comb(F.col("ai")))).alias("sa"),
-        F.sum(F.when(F.col("rn_k") == 1, comb(F.col("bj")))).alias("sb"),
-        comb(F.max("n")).alias("sn"),
-        F.sum(F.when(F.col("rn_k") == 1, 1).otherwise(0)).alias("nk"))
-
-    h = F.when(F.col("hc") > 0, F.lit(1.0) - F.col("hck") / F.col("hc")).otherwise(F.lit(1.0))
-    c = F.when(F.col("hk") > 0, F.lit(1.0) - F.col("hkc") / F.col("hk")).otherwise(F.lit(1.0))
-    v = F.when((h + c) > 0, F.lit(2.0) * h * c / (h + c)).otherwise(F.lit(0.0))
-    expected = F.col("sa").cast("double") * F.col("sb") / F.col("sn")
-    maxi = (F.col("sa") + F.col("sb")) / F.lit(2.0)
-    ari = (F.col("sij") - expected) / (maxi - expected)
-
-    cols = [F.round(h, 6).alias("homogeneity"),
-            F.round(c, 6).alias("completeness"),
-            F.round(v, 6).alias("v_measure"),
-            F.round(ari, 6).alias("ari")]
+    h = "(CASE WHEN hc > 0 THEN 1.0D - hck / hc ELSE 1.0D END)"
+    c = "(CASE WHEN hk > 0 THEN 1.0D - hkc / hk ELSE 1.0D END)"
+    v = (f"(CASE WHEN ({h} + {c}) > 0 THEN 2.0D * {h} * {c} / ({h} + {c}) "
+         f"ELSE 0.0D END)")
+    expected = "(CAST(sa AS DOUBLE) * sb / sn)"
+    ari = f"(sij - {expected}) / ((sa + sb) / 2.0D - {expected})"
+    cols = [f"round({h}, 6) AS homogeneity", f"round({c}, 6) AS completeness",
+            f"round({v}, 6) AS v_measure", f"round({ari}, 6) AS ari"]
     if include_pred_count:
-        cols.append(F.col("nk").cast("long").alias("n_clusters"))
-    return row.select(*cols)
+        cols.append("CAST(nk AS BIGINT) AS n_clusters")
+    return row.selectExpr(*cols)
 
 
 _METRICS_ORACLE = """
@@ -170,10 +166,11 @@ DRIVER_KMEANS_ROWS = 20_000
 
 class _DriverKMeansModel:
     """Minimal model surface over driver-fitted centers: ``transform``
-    appends ``prediction`` via a pure JVM argmin expression (k x d literal
-    algebra — no Python in the assignment path, so the transform
-    distributes exactly like the MLlib model's), plus the
-    ``summary.trainingCost`` / ``clusterCenters`` attributes callers use."""
+    appends ``prediction`` via a pure JVM argmin expression (one
+    ``transform`` over an array literal of the centers — no Python in the
+    assignment path, so the transform distributes exactly like the MLlib
+    model's), plus the ``summary.trainingCost`` / ``clusterCenters``
+    attributes callers use."""
 
     def __init__(self, centers, cost: float, features_col: str,
                  prediction_col: str = "prediction"):
@@ -187,14 +184,21 @@ class _DriverKMeansModel:
         return [c.copy() for c in self._centers]
 
     def transform(self, df: DataFrame) -> DataFrame:
+        """Squared distance to each center as a left-to-right
+        ``(a-b)*(a-b)`` fold, argmin by the first minimal index. The
+        centers travel as one array literal (one ``lit`` per center, not
+        per component), so the plan builds in a handful of py4j calls. The
+        literals sit inside higher-order functions, which generated code
+        references rather than inlines: a refit with new centers compiles
+        no new classes."""
+        import numpy as np
         from pyspark.ml.functions import vector_to_array
         x = vector_to_array(F.col(self._features_col))
-        dists = F.array(*[
-            F.aggregate(
-                F.zip_with(x, F.array(*[F.lit(float(v)) for v in c]),
-                           lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0), lambda acc, v: acc + v)
-            for c in self._centers])
+        centers = F.array(*[F.lit(np.asarray(c, dtype=np.float64))
+                            for c in self._centers])
+        dists = F.transform(centers, lambda c: F.aggregate(
+            F.zip_with(x, c, lambda a, b: (a - b) * (a - b)),
+            F.lit(0.0), lambda acc, v: acc + v))
         pred = (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
         return df.withColumn(self._prediction_col, pred)
 
@@ -278,8 +282,8 @@ def fit_kmeans_best(df: DataFrame, k: int = 10, n_init: int = 3,
 
     Both tiers return an object with ``transform`` /
     ``summary.trainingCost`` / ``clusterCenters``; the driver tier's
-    transform is JVM column algebra over broadcast-literal centers, so
-    label assignment distributes identically."""
+    transform is JVM column algebra over an array literal of the centers,
+    so label assignment distributes identically."""
     from pyspark.ml.clustering import KMeans
     from pyspark.storagelevel import StorageLevel
 
@@ -419,8 +423,17 @@ _W2V_MAX_PARTITIONS = 256
 
 
 def _w2v_num_partitions(docs_tokens: DataFrame, tokens_col: str) -> int:
-    n_tokens = (docs_tokens.agg(F.sum(F.size(tokens_col)))
-                .first()[0]) or 0
+    """Training partitions for the corpus' token count. The count is a sum
+    over a JVM double RDD: one job with no shuffle, where the DataFrame
+    aggregate took three over a freshly cached input (AQE's cache stage,
+    the partial-aggregate map stage, the final stage). Integer sums are
+    exact in a double up to 2^53 tokens."""
+    jvm = docs_tokens.sparkSession.sparkContext._jvm
+    sizes = docs_tokens.selectExpr(
+        f"CAST(coalesce(size(`{tokens_col}`), 0) AS DOUBLE)")._jdf
+    n_tokens = int(jvm.org.apache.spark.api.java.JavaDoubleRDD.fromRDD(
+        getattr(sizes, "as")(jvm.org.apache.spark.sql.Encoders.DOUBLE())
+        .rdd()).sum())
     return int(max(1, min(_W2V_MAX_PARTITIONS,
                           n_tokens // _W2V_TOKENS_PER_PARTITION)))
 

@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 from ..functions.vectors import sql_sq_dist, sq_dist
 from ..plans.registry import register
 from ..sources.readers import table
-from .pairwise import eps_pairs_broadcast
+from .pairwise import _broadcast_side, eps_pairs_broadcast
 
 DIM = 64
 EPS = 1.18          # fixture-calibrated: yields a core/border/noise mix
@@ -104,7 +104,7 @@ def _dbscan_driver_tier(spark: SparkSession, emb: DataFrame, id_col: str,
 
     Labeling is identical across regimes and to the distributed plan
     (min core id per component)."""
-    from .pairwise import _CHUNK_BUDGET, _broadcast_side
+    from .pairwise import _CHUNK_BUDGET
     # .value on a driver-created broadcast is the local object (no fetch);
     # sharing the broadcast handle keeps ONE cache entry serving both this
     # driver kernel and the distributed eps-pair kernel
@@ -299,7 +299,10 @@ def dbscan_labels(spark: SparkSession, emb: DataFrame, id_col: str = "vec_id",
     """Full DBSCAN; returns (id_col, cluster) with cluster = min member id
     of the density-connected component, or -1 for noise."""
     ids = emb.select(F.col(id_col).alias("id"))
-    n_rows = emb.count() if pairs is None else None
+    # n from the kernels' broadcast side: both tiers below collect it anyway
+    # (cached by plan), so the tier decision costs no count job
+    n_rows = (_broadcast_side(emb, id_col, vec_col)[1] if pairs is None
+              else None)
     if pairs is None and n_rows <= driver_kernel_rows:
         # driver-kernel tier (DRIVER_KERNEL_ROWS header note): distances,
         # components, borders all in chunked numpy — no eps-pair DataFrame.

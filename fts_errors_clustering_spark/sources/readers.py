@@ -93,6 +93,19 @@ _NANO_TS_COLS = {
 }
 
 
+#: Resolved tables, one per (application, dir, table): ``spark.read.parquet``
+#: lists the files and runs a schema job, and the timestamp rewrites below
+#: need a ``dtypes`` analysis, so each relation is resolved once per session
+#: and the same UNCACHED frame is returned after that — a replay still
+#: measures cold scans. Keyed by ``applicationId``, not ``id(spark)``
+#: (object ids are reused after GC, and a new session after ``stop()``
+#: must never get an old session's frame); a hit must also belong to the
+#: calling session object. Files replaced under a live session are not
+#: re-listed until the memo is cleared (``set_table_cache(False)``).
+#: Fixed-size LRU: only the tables in use stay resolved.
+_TABLE_MEMO_MAX = 64
+_TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+
 #: Opt-in cross-query table cache (OFF by default). A repeated-analysis
 #: session (bench.py's headline run, a notebook hammering the same corpus)
 #: re-scans the same base tables dozens of times; pinning them with
@@ -100,27 +113,21 @@ _NANO_TS_COLS = {
 #: 100 TB analogue is keeping hot tables in the cluster cache tier —
 #: standard for interactive re-analysis, and exactly the "plan
 #: reuse/caching across the headline run" lever: asymptotics unchanged,
-#: constants paid once. Keyed per (session, dir, table); default-off so
-#: the correctness driver's replay measures cold semantics.
-_TABLE_CACHE: dict[tuple[int, str, str], DataFrame] = {}
+#: constants paid once. Default-off so the correctness driver's replay
+#: measures cold semantics.
 _CACHE_TABLES = False
 
 
 def set_table_cache(enabled: bool) -> None:
+    """Pin resolved tables with ``.cache()`` from now on (``True``), or stop
+    pinning and clear the resolved-table memo (``False``)."""
     global _CACHE_TABLES
     _CACHE_TABLES = enabled
     if not enabled:
         _TABLE_CACHE.clear()
 
 
-def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Scan one fixture table. UTC session tz is (re)pinned on every scan so
-    timestamp results collect identically to the UTC-naive DuckDB oracle."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    key = (id(spark), sf_dir, name)
-    if _CACHE_TABLES and key in _TABLE_CACHE:
-        return _TABLE_CACHE[key]
+def _resolve(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     dtypes = dict(df.dtypes)
     for c in _NANO_TS_COLS.get(name, ()):
@@ -133,9 +140,24 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     for c, t in dtypes.items():
         if t == "timestamp_ntz":
             df = df.withColumn(c, F.col(c).cast("timestamp"))
-    if _CACHE_TABLES:
+    return df
+
+
+def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Scan one fixture table, resolved once per session (``_TABLE_CACHE``).
+    UTC session tz is (re)pinned on every call so timestamp results collect
+    identically to the UTC-naive DuckDB oracle."""
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    key = (spark.sparkContext.applicationId, sf_dir, name)
+    df = _TABLE_CACHE.pop(key, None)
+    if df is None or df.sparkSession is not spark:
+        df = _resolve(spark, sf_dir, name)
+    _TABLE_CACHE[key] = df  # (re)insert last: dict order is LRU order
+    while len(_TABLE_CACHE) > _TABLE_MEMO_MAX:
+        del _TABLE_CACHE[next(iter(_TABLE_CACHE))]
+    if _CACHE_TABLES and not df.is_cached:
         df = df.cache()
-        _TABLE_CACHE[key] = df
     return df
 
 

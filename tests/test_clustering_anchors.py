@@ -73,6 +73,15 @@ def test_w2v_partition_heuristic(spark, monkeypatch):
     assert C._w2v_num_partitions(toks, "tokens") == 3  # 12 // 4
     monkeypatch.setattr(C, "_W2V_MAX_PARTITIONS", 2)
     assert C._w2v_num_partitions(toks, "tokens") == 2  # capped
+    # the token count is the SQL sum of sizes, null rows included
+    monkeypatch.setattr(C, "_W2V_TOKENS_PER_PARTITION", 1)
+    monkeypatch.setattr(C, "_W2V_MAX_PARTITIONS", 100)
+    odd = spark.createDataFrame(
+        [(0, ["a"] * 7), (1, None), (2, []), (3, ["b"] * 5)],
+        "doc_id long, tokens array<string>")
+    assert C._w2v_num_partitions(odd, "tokens") == odd.agg(
+        F.sum(F.size("tokens"))).first()[0]
+    assert C._w2v_num_partitions(odd.limit(0), "tokens") == 1
 
 
 def test_w2v_mean_pool_determinism(w2v_200):
@@ -300,3 +309,140 @@ def test_kmeans_driver_tier_semantics(spark):
     assert (preds == d.argmin(1)).all()
     assert abs(d.min(1).sum() - m3.summary.trainingCost) < 1e-6 * max(
         m3.summary.trainingCost, 1.0)
+
+
+def _literal_kmeans_prediction(centers, features_col):
+    """The driver tier's earlier transform, kept as the reference: k
+    separate ``aggregate(zip_with(...))`` trees over one scalar literal per
+    center component."""
+    from pyspark.ml.functions import vector_to_array
+    x = vector_to_array(F.col(features_col))
+    dists = F.array(*[
+        F.aggregate(
+            F.zip_with(x, F.array(*[F.lit(float(v)) for v in c]),
+                       lambda a, b: (a - b) * (a - b)),
+            F.lit(0.0), lambda acc, v: acc + v)
+        for c in centers])
+    return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
+
+
+def _assert_transform_matches_literal_form(model, feats, features_col):
+    got = model.transform(feats).withColumn(
+        "ref", _literal_kmeans_prediction(model.clusterCenters(),
+                                          features_col))
+    rows = got.select("prediction", "ref").collect()
+    assert rows and all(r.prediction == r.ref for r in rows), [
+        (r.prediction, r.ref) for r in rows if r.prediction != r.ref][:5]
+    return rows
+
+
+def test_kmeans_transform_matches_literal_form_on_lsa_features(spark):
+    """The array-literal transform labels every row exactly as the scalar
+    literal form did, on flow A's own features (sf0.001 LSA, L2-normed)."""
+    from pyspark.ml.functions import array_to_vector
+
+    from fts_errors_clustering_spark.operators.tfidf import (fit_lsa_svd,
+                                                             fit_tfidf)
+
+    model_tfidf, feats = fit_tfidf(table(spark, SF_SMALL, "documents"))
+    svd_out, _ = fit_lsa_svd(
+        feats, k=10, dim=len(model_tfidf.stages[2].vocabulary))
+    nrm = F.sqrt(F.aggregate("lsa_svd", F.lit(0.0), lambda a, x: a + x * x))
+    lsa = svd_out.select(array_to_vector(
+        F.when(nrm > 0, F.transform("lsa_svd", lambda x: x / nrm))
+         .otherwise(F.col("lsa_svd"))).alias("lsa_features")).cache()
+    try:
+        model = fit_kmeans_best(lsa, k=10, n_init=2,
+                                features_col="lsa_features")
+        assert type(model).__name__ == "_DriverKMeansModel"
+        rows = _assert_transform_matches_literal_form(model, lsa,
+                                                      "lsa_features")
+        assert len({r.prediction for r in rows}) > 1
+    finally:
+        lsa.unpersist()
+
+
+def test_kmeans_transform_exact_ties_pick_first_center(spark):
+    """Exact distance ties (a duplicated center, points equidistant from two
+    centers) go to the lowest center index, as in the literal form."""
+    import numpy as np
+    from pyspark.ml.functions import array_to_vector
+
+    from fts_errors_clustering_spark.operators.clustering import \
+        _DriverKMeansModel
+
+    centers = np.array([[2.0, 0.0], [0.0, 0.0], [2.0, 0.0], [0.0, 2.0]])
+    model = _DriverKMeansModel(centers, 0.0, "f")
+    pts = [(1.0, 0.0), (2.0, 0.0), (0.0, 0.0), (1.0, 1.0), (0.0, 1.0),
+           (3.0, 5.0)]
+    feats = spark.createDataFrame(pts, "x double, y double").select(
+        array_to_vector(F.array("x", "y")).alias("f"))
+    rows = _assert_transform_matches_literal_form(model, feats, "f")
+    assert [r.prediction for r in rows] == [0, 0, 1, 0, 1, 3]
+
+
+def test_external_metrics_sql_text_same_plan_as_column_form(spark):
+    """The SQL-text M13 plan is the Column form's analyzed plan
+    (``sameSemantics``), and both give the same rows on the edge inputs:
+    one cluster, one label, an empty input, and with ``n_clusters``."""
+    from pyspark.sql import Window
+
+    from fts_errors_clustering_spark.operators.clustering import (
+        _dec_term_sum, external_cluster_metrics)
+
+    def column_form(assigned, label_col, pred_col, include_pred_count):
+        pts = assigned.select(F.col(label_col).alias("c"),
+                              F.col(pred_col).alias("k"))
+        cont = pts.groupBy("c", "k").agg(F.count("*").alias("nij"))
+        wall, wc = Window.partitionBy(), Window.partitionBy("c")
+        wk = Window.partitionBy("k")
+        annotated = cont.select(
+            "c", "k", "nij",
+            F.sum("nij").over(wall).alias("n"),
+            F.sum("nij").over(wc).alias("ai"),
+            F.sum("nij").over(wk).alias("bj"),
+            F.row_number().over(wc.orderBy("k")).alias("rn_c"),
+            F.row_number().over(wk.orderBy("c")).alias("rn_k"))
+        comb = lambda c: (c * (c - F.lit(1))).cast("long")  # noqa: E731
+        ent = lambda num, den: -_dec_term_sum(  # noqa: E731
+            (F.col("nij") / F.col("n")) * F.log(F.col(num) / F.col(den)))
+        row = annotated.agg(
+            ent("ai", "n").alias("hc"), ent("bj", "n").alias("hk"),
+            ent("nij", "bj").alias("hck"), ent("nij", "ai").alias("hkc"),
+            F.sum(comb(F.col("nij"))).alias("sij"),
+            F.sum(F.when(F.col("rn_c") == 1, comb(F.col("ai")))).alias("sa"),
+            F.sum(F.when(F.col("rn_k") == 1, comb(F.col("bj")))).alias("sb"),
+            comb(F.max("n")).alias("sn"),
+            F.sum(F.when(F.col("rn_k") == 1, 1).otherwise(0)).alias("nk"))
+        h = F.when(F.col("hc") > 0, F.lit(1.0) - F.col("hck") / F.col("hc")
+                   ).otherwise(F.lit(1.0))
+        c = F.when(F.col("hk") > 0, F.lit(1.0) - F.col("hkc") / F.col("hk")
+                   ).otherwise(F.lit(1.0))
+        v = F.when((h + c) > 0, F.lit(2.0) * h * c / (h + c)
+                   ).otherwise(F.lit(0.0))
+        expected = F.col("sa").cast("double") * F.col("sb") / F.col("sn")
+        maxi = (F.col("sa") + F.col("sb")) / F.lit(2.0)
+        ari = (F.col("sij") - expected) / (maxi - expected)
+        cols = [F.round(h, 6).alias("homogeneity"),
+                F.round(c, 6).alias("completeness"),
+                F.round(v, 6).alias("v_measure"),
+                F.round(ari, 6).alias("ari")]
+        if include_pred_count:
+            cols.append(F.col("nk").cast("long").alias("n_clusters"))
+        return row.select(*cols)
+
+    cases = {
+        "mixed": [("a", 0), ("a", 0), ("a", 1), ("b", 1), ("b", 2),
+                  ("c", 2)],
+        "one_cluster": [("a", 0), ("b", 0), ("c", 0)],
+        "one_label": [("a", 0), ("a", 1), ("a", 2)],
+        "empty": [],
+    }
+    for name, pts in cases.items():
+        df = spark.createDataFrame(pts, "lab string, prd int")
+        for with_count in (False, True):
+            new = external_cluster_metrics(df, "lab", "prd",
+                                           include_pred_count=with_count)
+            ref = column_form(df, "lab", "prd", with_count)
+            assert new.sameSemantics(ref), (name, with_count)
+            assert new.collect() == ref.collect(), (name, with_count)

@@ -333,3 +333,102 @@ def test_versioned_publish_guards(spark, tmp_path):
     assert not os.path.exists(lock)         # lock released on success
     # file: URI form of a local root is accepted
     assert publish_versioned_parquet(spark.range(2), "file://" + root) == 2
+
+
+def _jobs_in(spark, fn):
+    """(fn's result, number of Spark jobs fn submitted)."""
+    sc = spark.sparkContext
+    group = f"jobs-in-{id(fn)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_table_resolves_once_per_session(spark):
+    """A second ``table()`` call returns the frame the first resolved, with
+    no Spark job (no file listing, no schema job), and it stays uncached."""
+    from fts_errors_clustering_spark.sources.readers import table
+
+    first = table(spark, SF_SMALL, "events")
+    again, jobs = _jobs_in(spark, lambda: table(spark, SF_SMALL, "events"))
+    assert again is first and jobs == 0
+    assert not again.is_cached
+    assert dict(again.dtypes)["ts"] == "timestamp"
+
+
+def test_table_cache_pins_and_clearing_drops_memo(spark, monkeypatch):
+    """``set_table_cache(True)`` still pins the resolved frame;
+    ``set_table_cache(False)`` clears the memo, so the next call resolves
+    a new frame."""
+    from fts_errors_clustering_spark.sources import readers
+
+    monkeypatch.setattr(readers, "_TABLE_CACHE", {})
+    plain = readers.table(spark, SF_SMALL, "region")
+    readers.set_table_cache(True)
+    try:
+        pinned = readers.table(spark, SF_SMALL, "region")
+        assert pinned is plain and pinned.is_cached
+        assert pinned.storageLevel.useMemory
+    finally:
+        readers.set_table_cache(False)
+        plain.unpersist()
+    assert readers._TABLE_CACHE == {}
+    fresh = readers.table(spark, SF_SMALL, "region")
+    assert fresh is not plain and not fresh.is_cached
+
+
+def test_table_memo_is_fixed_size_lru(spark, monkeypatch):
+    """The memo keeps the most recently used ``_TABLE_MEMO_MAX`` tables: a
+    hit refreshes its entry and the least recently used one is evicted."""
+    from fts_errors_clustering_spark.sources import readers
+
+    cap = readers._TABLE_MEMO_MAX
+    monkeypatch.setattr(readers, "_TABLE_CACHE", {})
+    region = readers.table(spark, SF_SMALL, "region")
+    for i in range(cap - 1):
+        readers._TABLE_CACHE[("old-app", "dir", str(i))] = object()
+    assert readers.table(spark, SF_SMALL, "region") is region  # refresh
+    readers.table(spark, SF_SMALL, "nation")
+    assert len(readers._TABLE_CACHE) == cap
+    assert ("old-app", "dir", "0") not in readers._TABLE_CACHE
+    assert readers.table(spark, SF_SMALL, "region") is region
+
+
+_NEW_SESSION_SCRIPT = """
+import sys
+from pyspark.sql import SparkSession
+from fts_errors_clustering_spark.sources.readers import table
+sf = sys.argv[1]
+b = SparkSession.builder.master("local[1]").config("spark.ui.enabled", "false")
+s1 = b.getOrCreate()
+d1 = table(s1, sf, "region")
+n1 = d1.count()
+s1.stop()
+s2 = b.getOrCreate()
+d2 = table(s2, sf, "region")
+assert d2 is not d1 and d2.sparkSession is s2
+assert d2.count() == n1
+s2.stop()
+print("ok")
+"""
+
+
+def test_table_new_session_after_stop_gets_new_frame(tmp_path):
+    """A session started after ``stop()`` never gets the old session's
+    frame (the memo is keyed by application id). Own process: the test
+    session cannot be stopped."""
+    import subprocess
+    import sys
+
+    script = tmp_path / "new_session.py"
+    script.write_text(_NEW_SESSION_SCRIPT)
+    env = dict(os.environ, PYTHONPATH=os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))))
+    out = subprocess.run([sys.executable, str(script), SF_SMALL], env=env,
+                         capture_output=True, text=True, timeout=300)
+    assert out.returncode == 0 and out.stdout.strip().endswith("ok"), (
+        out.stdout[-2000:], out.stderr[-2000:])
